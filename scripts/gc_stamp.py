@@ -17,15 +17,16 @@ import sys
 def parse_gc(path):
     pauses = []  # (epoch_ms, pause_ms, kind)
     pat = re.compile(
-        r"\[(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3})[+-]\d{4}\]"
+        r"\[(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}[+-]\d{4})\]"
         r".*?Pause (\w+)[^)]*\).*?(\d+\.\d+)ms")
     import datetime
     for line in open(path, errors="replace"):
         m = pat.search(line)
         if not m:
             continue
-        ts = datetime.datetime.strptime(m.group(1), "%Y-%m-%dT%H:%M:%S.%f")
-        epoch_ms = int(ts.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000)
+        # the stamp carries the JVM's local offset; %z honors it
+        ts = datetime.datetime.strptime(m.group(1), "%Y-%m-%dT%H:%M:%S.%f%z")
+        epoch_ms = round(ts.timestamp() * 1000)
         pauses.append((epoch_ms, float(m.group(3)), m.group(2)))
     return pauses
 

@@ -1,7 +1,11 @@
 package graft
 
-import graft.core.Registry
-import org.apache.spark.sql.SparkSession
+import graft.core.{Registry, Session}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.GraftBridge
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Benchmark main: times the headline (`bench = true`) queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -13,6 +17,29 @@ import org.apache.spark.sql.SparkSession
   * cluster would run.
   */
 object Bench {
+  /** Summed executor run time of every task that has ended. `readMs`
+    * drains the listener bus first: an action returns before its
+    * task-end events reach the listeners, so an undrained read right
+    * after one query misses its trailing tasks and bills them to the
+    * next query. */
+  final class TaskClock(sc: SparkContext) extends SparkListener {
+    private val ms = new AtomicLong
+    sc.addSparkListener(this)
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) ms.addAndGet(t.taskMetrics.executorRunTime)
+    def readMs(): Long = { GraftBridge.drainListenerBus(sc); ms.get() }
+  }
+
+  /** Runs `action` once: (wall seconds, executor task seconds). The bus
+    * drains sit outside the wall window. */
+  def timeOnce(clock: TaskClock)(action: => Unit): (Double, Double) = {
+    val tm0 = clock.readMs()
+    val t0 = System.nanoTime()
+    action
+    val wallS = (System.nanoTime() - t0) / 1e9
+    (wallS, (clock.readMs() - tm0) / 1000.0)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -24,41 +51,12 @@ object Bench {
     // guidance; the knob exists so a drifting BENCH number can be
     // bisected into host-vs-plan in one run.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Per-query executor task time, summed by a listener across the
-    // measured pass (same probe as tools/LabProfile): stamped into the
-    // JSON next to each wall figure so a reader can tell WAVE-bound
-    // (task_time ≪ wall × cores — adding cores cannot help; the flat
-    // 8-vs-32-core ratios at sf0.1 are this, not an ignored knob) from
-    // COMPUTE-bound. The scaling evidence the r12 verdict asked for.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-buffer TypedImperativeAggregates (MinKByKey, HLL, capped
-      // collect) keep <= K entries per group, so the ObjectHashAggregate
-      // 128-key sort fallback only costs (measured: d25 48 s -> 11.6 s
-      // at sf1); on a cluster, set this in the job conf the same way
-      // heap-derived (env-overridable): the 2M hard-code twice proved
-      // too small for sf10 bucket stages — see graft.core.Tuning
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Coalesce small shuffle stages by SIZE, not parallelism (the
-      // Spark-docs-recommended setting): iterative/bucket stages over
-      // kilobytes collapse to one task instead of 32 scheduling rounds,
-      // while big exchanges keep their width. Cached plans participate
-      // too (the label-propagation working sets are cached).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) taskMs.addAndGet(t.taskMetrics.executorRunTime)
-    })
+    val spark = Session.local(cpus.toInt, shuffle.toInt)
+    // Per-query executor task time beside each wall figure, so a reader
+    // can tell WAVE-bound (task_time ≪ wall × cores — adding cores cannot
+    // help; the flat 8-vs-32-core ratios at sf0.1 are this, not an
+    // ignored knob) from COMPUTE-bound.
+    val clock = new TaskClock(spark.sparkContext)
 
     // Host-health probe (same fixed workload as tools/ScaleSweep): time
     // h2 at the synthesized sf1 before and after the measured passes and
@@ -105,12 +103,9 @@ object Bench {
     // throwing query records None, not its (near-zero) elapsed time — a
     // broken query must fail the bench, never shrink the reported total.
     def timed(): Seq[(String, Option[(Double, Double)])] = benchQueries.map { q =>
-      val tm0 = taskMs.get()
-      val t0 = System.nanoTime()
-      try {
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-        q.name -> Some(((System.nanoTime() - t0) / 1e9, (taskMs.get() - tm0) / 1000.0))
-      } catch { case e: Throwable =>
+      try q.name -> Some(timeOnce(clock)(
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()))
+      catch { case e: Throwable =>
         System.err.println(s"[bench] ${q.name}: ${e.getMessage}")
         q.name -> None
       }

@@ -38,10 +38,9 @@ import scala.collection.mutable.ArrayBuffer
   */
 object StreamBench {
   /** `perBatch` is the per-micro-batch (latencyS, rows) series in COMMIT
-    * order (for gate mode, rows = decisions routed that trigger); the
-    * bisect tooling ([[graft.tools.StreamBisect]]) reads it to separate
-    * within-run growth (per-batch state/merge cost rising batch over
-    * batch) from across-run level shifts (host window). */
+    * order (for gate mode, rows = decisions routed that trigger): it
+    * separates within-run growth (per-batch state/merge cost rising batch
+    * over batch) from across-run level shifts (host window). */
   final case class Result(rows: Long, wallS: Double, rowsPerS: Double,
       p50S: Double, p95S: Double, maxS: Double, batches: Int,
       perBatch: Seq[(Double, Long)] = Nil)
@@ -69,22 +68,21 @@ object StreamBench {
   def run(spark: SparkSession, rate: Int = 5000, durationS: Int = 12,
       mode: String = "upsert",
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      warm: Boolean = true,
-      capFrames: Option[Int] = None): Result = {
+      warm: Boolean = true): Result = {
     if (warm) {
       // Warm at the FULL rate so the measured run's batch sizes (and
       // their codegen/state-store shapes) are exactly what got JIT'd —
       // a 2k/s warm-up leaves the 5k-row batch path cold.
-      if (mode == "gate") runGateOnce(spark, rate, 3, trigger, capFrames)
-      else runOnce(spark, rate, 3, mode, trigger, capFrames)
+      if (mode == "gate") runGateOnce(spark, rate, 3, trigger)
+      else runOnce(spark, rate, 3, mode, trigger)
       // Host state trails heavy runs (see verify skill): give the JVM a
       // GC + settle window so the warm-up's churn doesn't bleed into the
       // first measured micro-batches.
       System.gc()
       Thread.sleep(2000)
     }
-    if (mode == "gate") runGateOnce(spark, rate, durationS, trigger, capFrames)
-    else runOnce(spark, rate, durationS, mode, trigger, capFrames)
+    if (mode == "gate") runGateOnce(spark, rate, durationS, trigger)
+    else runOnce(spark, rate, durationS, mode, trigger)
   }
 
   /** Synthetic doc text: 12 tokens over a 400-word vocab, the token
@@ -98,7 +96,7 @@ object StreamBench {
         pmod(seq * 7 + j * j, lit(400)).cast("string"))))
 
   private def runGateOnce(spark: SparkSession, rate: Int, durationS: Int,
-      trigger: Trigger, capFrames: Option[Int] = None): Result = {
+      trigger: Trigger): Result = {
     val tmp = Files.createTempDirectory("graft-streamgate")
     val total = rate.toLong * durationS
     // frozen model: trained once, count tables pinned + broadcast — the
@@ -171,7 +169,7 @@ object StreamBench {
       // reads 2.9 s without the stall). 4×rate keeps catch-up batches
       // bounded (the r10 reason the cap exists) while draining a stall
       // in 2-3 triggers instead of never.
-      .option("maxFramesPerBatch", capFrames.getOrElse(4 * rate).toString)
+      .option("maxFramesPerBatch", (4 * rate).toString)
       .load()
       .select(
         get_json_object(col("raw"), "$.d").cast("long").as("doc_id"),
@@ -241,7 +239,7 @@ object StreamBench {
   }
 
   private def runOnce(spark: SparkSession, rate: Int, durationS: Int,
-      mode: String, trigger: Trigger, capFrames: Option[Int] = None): Result = {
+      mode: String, trigger: Trigger): Result = {
     val tmp = Files.createTempDirectory("graft-streambench")
     val total = rate.toLong * durationS
     val tickers = Array("SPY", "VOO", "QQQ", "IWM")
@@ -291,16 +289,9 @@ object StreamBench {
     // cost is dominated by the FIXED multi-job merge plan, so fewer,
     // bigger catch-up batches amortize it (capping upsert was measured at
     // p95 11.3 s vs 5.1 s uncapped at the same 5k/s).
-    // `capFrames` (bisect tooling) overrides the mode default: a FIXED
-    // per-batch volume makes latency comparable across hosts and rounds
-    // (upsert's uncapped default lets a slow window produce fewer,
-    // bigger batches whose oldest-frame latency is mechanically higher).
-    val frames = (capFrames match {
-        case Some(cap) => reader.option("maxFramesPerBatch", cap.toString)
-        case None if mode == "stateful" =>
-          reader.option("maxFramesPerBatch", (2 * rate).toString)
-        case None => reader
-      })
+    val frames = (if (mode == "stateful")
+        reader.option("maxFramesPerBatch", (2 * rate).toString)
+      else reader)
       .load()
       .select(col("raw"))
 
@@ -387,16 +378,8 @@ object StreamBench {
     val rate = if (args.length > 0) args(0).toInt else 5000
     val durationS = if (args.length > 1) args(1).toInt else 12
     val mode = if (args.length > 2) args(2) else "upsert"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32)
     val r = run(spark, rate, durationS, mode)
     // per-batch series + commit wall-clock stamps so a GC/host log can be
     // correlated batch-by-batch (r12 verdict item: stall forensics)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional extra
@@ -10,22 +10,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-buffer TypedImperativeAggregates (MinKByKey, HLL, capped
-      // collect) keep <= K entries per group, so the ObjectHashAggregate
-      // 128-key sort fallback only costs (measured: d25 48 s -> 11.6 s
-      // at sf1); on a cluster, set this in the job conf the same way
-      // heap-derived (env-overridable): the 2M hard-code twice proved
-      // too small for sf10 bucket stages — see graft.core.Tuning
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, cpus.toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -6,7 +6,6 @@ import graft.model._
 import graft.read.ReadApi
 import graft.read.ReadApi.ReadRequest
 import graft.store.StockStore
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end usage example: the reference's demo flow (fetch SPY bars →
   * store → range-read → stats) through the public API. Run:
@@ -15,13 +14,7 @@ import org.apache.spark.sql.SparkSession
 object DemoIngest {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(4, 4)
 
     // canned provider page (the reference's CI payload shape); production
     // injects an HTTP fetcher here instead

@@ -17,8 +17,11 @@ import org.apache.spark.sql.functions._
   * S_k = Σ C_k over the context, and N_k = distinct continuations of
   * the context. KnNgramLmSpec proves Σ_w p_n(w|ctx) = 1 exactly in
   * rationals for every order (the same telescoping argument at each
-  * level: Σ(C−D) + D·N = S), and asserts bit-equality with the
-  * hand-written n=2/n=3 siblings.
+  * level: Σ(C−D) + D·N = S). It asserts that n=3 matches [[KnTrigramLm]]
+  * bit for bit (num, den and bits) and that n=2 matches [[KnBigramLm]]
+  * on num/den only: the bigram quantizes surprisal as
+  * `len(bin(den)) − len(bin(num))`, not `len(bin(den div num))`
+  * (num=1, den=8 gives 3 there and 4 here).
   *
   * Arithmetic: exact num/den rationals in DECIMAL(38,0) (DuckDB
   * HUGEINT), surprisal quantized from the BIGINT-safe quotient

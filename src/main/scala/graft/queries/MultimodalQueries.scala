@@ -756,7 +756,7 @@ object MultimodalQueries {
     // discipline at container scale — every doc carries the SAME
     // three-fixture MJPEG clip (muxed once, closure-shipped) and the
     // oracle pins the decoded frame luma sums as literals
-    // (graft.tools.LabMjpeg recomputes them): gradient 23040,
+    // (AviCodecSpec re-decodes gradient + radial): gradient 23040,
     // checker 30720, radial 31363; every-2nd sampling keeps frames
     // 0 and 2, and only sampled frames pay the JPEG decode. The
     // decoder tag pins that the real entropy-decode + IDCT ran (a DIB
@@ -843,7 +843,7 @@ object MultimodalQueries {
     // Video side is fixture-pinned (m21's discipline — lossy can't
     // generator-roundtrip): every doc carries the same muxed 3-fixture
     // clip, every-2nd sampling keeps frames 0 and 2, luma literals
-    // 23040 + 31363 = 54403 (graft.tools.LabMjpeg recomputes). Audio is
+    // 23040 + 31363 = 54403 (AviCodecSpec re-decodes them). Audio is
     // per-doc analytic like m22 (lossless PCM), so the oracle checks
     // both streams through one row. Both decodes happen in ONE batched
     // seam pass; only sampled frames pay the JPEG entropy-decode+IDCT.

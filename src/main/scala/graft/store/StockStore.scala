@@ -180,10 +180,10 @@ object StockStore {
     // keeps one of N identical rows, and the window's xxhash64 order is
     // a per-row function.
     // (r13 A/B: swapping this cache for an eager localCheckpoint — to
-    // truncate downstream plan analysis — was measured WORSE in LabUpsert,
-    // min 2.66 s/16 jobs vs 2.43 s/15 jobs same window: the extra eager
+    // truncate downstream plan analysis — was measured WORSE, min
+    // 2.66 s/16 jobs vs 2.43 s/15 jobs same window: the extra eager
     // materialization wave costs more than the analysis it saves. The
-    // cache stays.)
+    // cache stays. OPTIMIZATION_r13.md, change 3 item 4.)
     val dedupedRaw = nonNull.repartition(idxCols.map(col): _*)
       .dropDuplicates(idxCols ++ payloadCols)
     val deduped = dedupObs.map(o => dedupedRaw.observe(o, count(lit(1)).as("n")))
@@ -241,7 +241,8 @@ object StockStore {
     // collect (CollectMetrics on the cached batch) — they used to be a
     // second whole driver action per micro-batch.
     // job labels (guide §1.5): the merge's waves are attributable in the
-    // UI / LabUpsert without guessing; thread-local, reset at the end
+    // UI and in perfbench's `store.job_s.*` spans (which match on these
+    // descriptions) without guessing; thread-local, reset at the end
     def labeled[T](desc: String)(body: => T): T = {
       spark.sparkContext.setJobDescription(s"upsert[${dt.name}]: $desc")
       try body finally spark.sparkContext.setJobDescription(null)
@@ -255,10 +256,10 @@ object StockStore {
     //  - cheap (streaming) mode: the distinct tuple set rides the SAME
     //    CollectMetrics observation as the ts-window min/max, and ONE
     //    noop write materializes batch pin + all observations — the
-    //    separate distinct exchange and its waves disappear (LabUpsert:
-    //    touched 4 jobs → 2). Sound because cheap mode is the
-    //    admission-capped streaming contract: per-task collect_set
-    //    state is bounded by the batch's distinct (ticker,
+    //    separate distinct exchange and its waves disappear (touched
+    //    4 jobs → 2, OPTIMIZATION_r13.md change 7). Sound because cheap
+    //    mode is the admission-capped streaming contract: per-task
+    //    collect_set state is bounded by the batch's distinct (ticker,
     //    calendar-unit) tuples, which the cap bounds.
     val tupleExprs = pruneCols.map {
       case "ticker" => col("ticker"); case "y" => py

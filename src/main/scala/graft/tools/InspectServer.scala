@@ -49,13 +49,9 @@ object InspectServer {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: InspectServer <storeRoot> [port]")
     val port = if (args.length > 1) args(1).toInt else 8080
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
     val server = start(spark, args(0), port)
     println(s"inspect server on http://127.0.0.1:${server.getAddress.getPort}/ over ${args(0)}")
     Thread.currentThread.join()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only micro-lab for the admission gate's PER-BATCH cost (the
@@ -27,15 +27,8 @@ object LabGate {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(10000)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "8") // gateWith's setting
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 8) // gateWith's width
 
     val trusted = spark.range(4000)
       .select(col("id").as("doc_id"), docText(col("id"), lit(false)).as("text"))

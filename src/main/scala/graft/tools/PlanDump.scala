@@ -1,14 +1,15 @@
 package graft.tools
 
-import graft.core.Registry
-import org.apache.spark.sql.SparkSession
+import graft.core.{Registry, Session}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Dev-only plan dumper: writes `explain("formatted")` for the named
   * registry queries to `<outDir>/<query>.txt` — the files committed
   * under `plans/` as optimization-round evidence (the judge can read a
-  * plan diff; it cannot run Spark). Uses the same session settings as
-  * [[graft.Bench]] so the dumped plan is the shape the bench executes
-  * (AQE on, size-based coalescing), modulo AQE's runtime re-planning.
+  * plan diff; it cannot run Spark). Builds its session through
+  * [[graft.core.Session]] like [[graft.Bench]], so the dumped plan is the
+  * shape the bench executes (AQE on, size-based coalescing), modulo AQE's
+  * runtime re-planning.
   *
   * Usage: `scripts/run_main.sh graft.tools.PlanDump <outDir> <query>...`
   * Data dir via SPARK_GRAFT_SF_DIR (default sf0.001 — plan SHAPE is
@@ -21,19 +22,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, 4)
     // GRAFT_PLAN_EXEC=1: run each query through the noop sink first and
     // dump the POST-execution plan — with AQE on, exchange/broadcast
     // stage reuse and the final join strategies only exist at runtime
@@ -60,9 +49,9 @@ object PlanDump {
           val plan = if (exec) {
             lastExecuted = None
             df.write.format("noop").mode("overwrite").save()
-            // listener delivery is async; wait for the executed plan
-            var waited = 0
-            while (lastExecuted.isEmpty && waited < 100) { Thread.sleep(100); waited += 1 }
+            // listener delivery is async: drain the bus so this query's
+            // executed plan, and no later one, is the one written out
+            GraftBridge.drainListenerBus(spark.sparkContext)
             lastExecuted.getOrElse("<no executed plan captured>")
           } else df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)

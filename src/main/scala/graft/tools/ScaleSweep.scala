@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.{GraftQuery, Registry}
+import graft.core.{GraftQuery, Registry, Session}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
@@ -226,24 +226,11 @@ object ScaleSweep {
     val timeoutSec = if (args.length > 2) args(2).toLong else 180L
     val names = args.drop(3).toSet
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // data-sized (env-overridable): 32 partitions at sf10 filled 32
-      // concurrent objhash maps and GC-killed the JVM — see Tuning
-      .config("spark.sql.shuffle.partitions",
-        graft.core.Tuning.shufflePartitionsFor(dir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // heap-derived (env-overridable): the 2M hard-code twice proved
-      // too small for sf10 bucket stages — see graft.core.Tuning
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // data-sized (env-overridable): 32 partitions at sf10 filled 32
+    // concurrent objhash maps and GC-killed the JVM — see Tuning
+    val spark = Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      graft.core.Tuning.shufflePartitionsFor(dir).toInt)
 
     // Host-health pre-gate: time the fixed reference workload (h2 at the
     // synthesized sf1) before and after the sweep. Round-8 taught that

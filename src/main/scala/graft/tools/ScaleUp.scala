@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an sf1-equivalent dataset (~10x sf0.1) for the empirical
@@ -84,13 +84,8 @@ object ScaleUp {
     val out = if (args.length > 1) args(1) else "data/sf1"
     val r   = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32)
     def rd(t: String) = spark.read.parquet(s"$in/$t.parquet")
     def wr(df: DataFrame, t: String, files: Int): Unit =
       df.drop("rep").repartition(files).write.mode("overwrite").parquet(s"$out/$t.parquet")

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.AbstractDataType
 /** Access shim for `private[sql]` Spark internals needed to expose custom
   * Catalyst expressions as user-facing Columns (the standard pattern for
   * Spark extension libraries — a bridge object inside the sql package
-  * namespace). Only pure adapters live here; all graft logic stays in the
-  * `graft.*` packages.
+  * namespace), plus the `private[spark]` listener-bus drain. Only pure
+  * adapters live here; all graft logic stays in the `graft.*` packages.
   */
 object GraftBridge {
   /** Wrap a Catalyst expression as a Column (Spark 4 classic API). */
@@ -26,6 +26,12 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Blocks until every listener has seen every event posted so far, so
+    * a counter a listener keeps is complete for the actions that have
+    * returned. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   type AbstractType = AbstractDataType
 }

@@ -167,7 +167,7 @@ class AviCodecSpec extends AnyFunSuite {
     // combined seam row with the pinned fixture luma
     val st = AviCodec.avMjpegStatsBatch(2)(Seq((9L, "video", av))).head
     assert(st.decoder == "avi/mjpeg-av-v1" && st.n_frames_sampled == 2)
-    assert(st.luma_units == 23040L + 31363L) // gradient + radial (LabMjpeg)
+    assert(st.luma_units == 23040L + 31363L) // gradient + radial: m21/m23's literals
     assert(st.amp_units == samples.map(s => math.abs(s.toLong)).sum)
     // cross-kind rejects: each A/V seam refuses the other's container,
     // and the DIB decoder refuses the lossy interleave outright

@@ -4,24 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (spark_guide.md: one session
   * per suite via lazy val; sharing across suites is fine since config is
-  * identical and immutable). */
+  * identical and immutable). Built through the production builder, so the
+  * suite runs the conf `Bench` and `Verify` run (see SessionSpec). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // heap-derived (~2M at the test JVM's 8g — the value this line
-      // used to hard-code); see graft.core.Tuning
-      .config(graft.core.Tuning.ObjHashFallbackConfKey,
-        graft.core.Tuning.objHashFallback)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.local(4, 4)
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -25,8 +25,8 @@ class StreamBenchSpec extends AnyFunSuite {
     // r11 the gate rides the same WAL doc feed as the tick modes
     // (generates EXACTLY total frames, maxFramesPerBatch-capped), so
     // the old unbounded-rate-source overshoot tolerance is gone: the
-    // bound is == again, and the per-batch series must be populated
-    // for the bisect tooling.
+    // bound is == again, and the per-batch series Bench prints must be
+    // populated.
     val r = StreamBench.run(spark, rate = 500, durationS = 2, mode = "gate")
     assert(r.rows == 1000L, s"every generated doc must be routed admit/reject, got ${r.rows}")
     assert(r.batches >= 1 && r.wallS > 0 && r.rowsPerS > 0)
