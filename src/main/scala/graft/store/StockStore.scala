@@ -4,6 +4,7 @@ import graft.functions.TimeFunctions
 import graft.model._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Partitioned columnar store with the reference writer's semantics
@@ -70,18 +71,26 @@ object StockStore {
     * `mergeSchema` unifies files written before/after a dynamic column
     * arrived (A10) — older rows read back with the new column null. */
   def readOrEmpty(spark: SparkSession, root: String, dt: StockDataType,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    readBack(spark, root, dt, schema)._1
+
+  /** [[readOrEmpty]] plus the stamp of the commit it read (None for an
+    * absent, empty or legacy table) — the upsert carries the schema memo
+    * forward from it after publishing ([[carrySchemaMemo]]). */
+  private def readBack(spark: SparkSession, root: String, dt: StockDataType,
+      schema: org.apache.spark.sql.types.StructType)
+      : (DataFrame, Option[TableLog.Commit.Stamp]) = {
     val p = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (!fs.exists(p)) empty
+    if (!fs.exists(p)) (empty, None)
     else committedState(fs, p) match {
-      case Some((_, Nil)) => empty // commit log exists but nothing committed yet
+      case Some((_, Nil)) => (empty, None) // commit log exists but nothing committed yet
       // reuse the state just read instead of a second commits() pass —
       // the streaming sink calls this every micro-batch
-      case Some(st) => tableFromState(spark, p, st)
-      case None => table(spark, root, dt)
+      case Some(st) => (tableFromState(spark, p, st), Some(st._1))
+      case None => (table(spark, root, dt), None)
     }
   }
 
@@ -207,13 +216,18 @@ object StockStore {
     // to the batch's own partition tuples: an index key's store rows can
     // only live in the partition its event time maps to (same local-
     // calendar stamping both sides), so reading any other partition is
-    // pure waste — and for a streaming sink the read-back would
-    // otherwise grow with STORE size, not batch size, putting every
-    // micro-batch's latency on an upward ramp. The tuple collect is one
-    // tiny driver action against the cached batch (bounded by
-    // tickers × calendar units touched); batches touching more than 4096
-    // partitions (a full-history backfill) skip pruning and scan as
-    // before.
+    // pure waste. The tuple set comes from one tiny driver action
+    // against the cached batch (bounded by tickers × calendar units
+    // touched); batches touching more than 4096 partitions (a
+    // full-history backfill) skip pruning and scan every partition.
+    // The prune bounds the rows the merge SCANS by the batch; building
+    // the relation is metadata work over every committed file, which a
+    // plain `spark.read` would make store-sized per trigger (a listing
+    // job over all files above 32 of them, and a footer-reading schema
+    // job after every commit). [[tableFromState]] stats only files this
+    // process has not seen, and [[carrySchemaMemo]] keeps the schema
+    // across commits that add no column, so that cost follows the files
+    // each trigger writes.
     //
     // The calendar-tuple prune is only sound when every upsert to this
     // store stamped partitions with the SAME tz: a row near local
@@ -329,7 +343,7 @@ object StockStore {
         case _ => None
       }
     }
-    val existingRaw0 = readOrEmpty(spark, root, dt,
+    val (existingRaw0, readStamp) = readBack(spark, root, dt,
       deduped.withColumn("version", lit(1)).schema)
     val existingRaw1 = partitionPrune
       .filter(_ => existingRaw0.columns.contains(pruneCols.last))
@@ -505,14 +519,17 @@ object StockStore {
         }
         val dataRel = TableLog.promote(fs, stageData, tp)
         val statsRel = TableLog.promote(fs, stageStats, sp)
-        TableLog.publish(fs, tp, dataRel, statsRel)
+        val published = TableLog.publish(fs, tp, dataRel, statsRel)
         // Manifest squash: a streaming sink lands one manifest per
         // micro-batch and every read pays an O(commits) listing. Each
         // AutoSquashEvery commits, fold the live set into one reset
         // manifest (no data rewrite) and prune the superseded manifests —
         // commit listing stays O(1) however long the stream runs.
-        if (TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery))
-          TableLog.vacuum(fs, tp, sp)
+        val squash = TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery)
+        if (squash >= 0) TableLog.vacuum(fs, tp, sp)
+        readStamp.foreach(carrySchemaMemo(fs, tp, _,
+          if (squash >= 0) Seq(published, squash) else Seq(published),
+          out.schema, partCols))
       }
       fs.delete(stageData, true)
       fs.delete(stageStats, true)
@@ -526,20 +543,10 @@ object StockStore {
   /** Read the stored table (post-merge). Manifest-aware: only files a
     * committed manifest references are visible (a crashed half-written
     * batch is not); tables without a commit log (legacy layout) read the
-    * directory. `mergeSchema` unifies files from before/after any
-    * dynamically-added column (A10): old rows carry null in the new
-    * column. `basePath` keeps partition-column inference — and therefore
-    * Catalyst partition pruning — identical to a plain directory read. */
-  // Unified-schema memo per (table, last commit id): mergeSchema reads
-  // every file's footer on every call — O(files) per read, per
-  // micro-batch on the streaming path. The union schema only changes
-  // when a commit lands (evolution), so one mergeSchema inference per
-  // commit id is cached and later reads pass the schema explicitly (the
-  // parquet reader null-fills columns a file lacks, which is exactly the
-  // append-only evolution semantics).
-  private val tableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.types.StructType)]()
-
+    * directory. The schema is the union of every file's (A10): old rows
+    * carry null in a dynamically-added column. `basePath` keeps
+    * partition-column inference — and therefore Catalyst partition
+    * pruning — identical to a plain directory read. */
   def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -550,18 +557,89 @@ object StockStore {
     }
   }
 
+  // Union-schema memo per table, valid for one commit stamp: inferring it
+  // reads every file's footer (a Spark job). The union only changes when
+  // a commit adds a column, so one inference serves every read of a
+  // commit, and [[carrySchemaMemo]] moves it across this process's own
+  // commits that add none. The stamp (log token, id, manifest length and
+  // mtime) rather than the id keeps a table recreated at the same path
+  // from reading the old table's schema.
+  private val tableSchemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (TableLog.Commit.Stamp, org.apache.spark.sql.types.StructType)]()
+
+  // One FileStatusCache client for every table. Committed files are
+  // immutable and carry job-unique absolute paths, so a status seen once
+  // stays right for as long as a manifest references the path; reads
+  // then stat only files this process has not seen (serially, below
+  // Spark's 32-path parallel listing threshold for any one trigger's
+  // files). The entries live in Spark's shared, size-bounded cache.
+  private var fileStatusCache: org.apache.spark.sql.execution.datasources.FileStatusCache = _
+  private def fileStatuses(spark: SparkSession) = synchronized {
+    if (fileStatusCache == null) fileStatusCache =
+      org.apache.spark.sql.execution.datasources.FileStatusCache.getOrCreate(spark)
+    fileStatusCache
+  }
+
+  /** The relation over exactly the committed files, built the way
+    * `spark.read.parquet(files)` builds it — an [[org.apache.spark.sql
+    * .execution.datasources.InMemoryFileIndex]] under a
+    * `HadoopFsRelation` — but with the shared status cache and the
+    * memoized schema, so it neither globs nor lists what it has seen. */
   private def tableFromState(spark: SparkSession, tp: org.apache.hadoop.fs.Path,
-      state: (Long, Seq[String])): DataFrame = {
-    val (lastId, files) = state
+      state: (TableLog.Commit.Stamp, Seq[String])): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val (stamp, files) = state
     val key = tp.toString
-    val cached = tableSchemaCache.get(key)
-    if (cached != null && cached._1 == lastId)
-      spark.read.schema(cached._2).option("basePath", tp.toString).parquet(files: _*)
-    else {
-      val df = spark.read.option("mergeSchema", "true")
-        .option("basePath", tp.toString).parquet(files: _*)
-      tableSchemaCache.put(key, (lastId, df.schema))
-      df
+    val opts = Map("basePath" -> key)
+    val memo = Option(tableSchemaCache.get(key)).collect { case (`stamp`, s) => s }
+    val index = new InMemoryFileIndex(spark, files.map(new org.apache.hadoop.fs.Path(_)),
+      opts, memo, fileStatuses(spark))
+    // spark.read fails on a path that does not exist; the index alone
+    // would skip a missing root path without a word
+    val leaves = index.allFiles()
+    if (leaves.length != files.distinct.length) {
+      val found = leaves.map(_.getPath.toUri.getPath).toSet
+      val missing = files.filterNot(f => found(new org.apache.hadoop.fs.Path(f).toUri.getPath))
+      throw new java.io.FileNotFoundException(
+        s"committed files missing under $tp: ${missing.take(5).mkString(", ")}")
+    }
+    val partSchema = index.partitionSchema
+    val dataSchema = memo match {
+      case Some(s) => org.apache.spark.sql.types.StructType(
+        s.filterNot(f => partSchema.exists(_.name.equalsIgnoreCase(f.name))))
+      case None => new ParquetFileFormat()
+        .inferSchema(spark, Map("mergeSchema" -> "true"), leaves).get
+    }
+    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      GraftBridge.asNullable(dataSchema), None, new ParquetFileFormat, opts)(spark))
+    if (memo.isEmpty) tableSchemaCache.put(key, (stamp, df.schema))
+    df
+  }
+
+  /** After an upsert publishes, move the schema memo from the commit its
+    * read-back saw (`before`) to the upsert's own last commit — only when
+    * the log moved from `before` by this upsert alone, and every data
+    * column the batch wrote is already in the memo with the same type.
+    * `own` are the ids this upsert published (its commit, then the squash
+    * if one fired); they must follow `before.id` with no gap. Ids are
+    * max+1 over manifest names, so a gap means another writer (another
+    * process, or a direct [[TableLog.publish]]) committed in between,
+    * maybe a new column, and the memo stays behind. So does it
+    * when the batch brings a new column (A10) or a new type; the next
+    * read then infers the schema again. */
+  private def carrySchemaMemo(fs: org.apache.hadoop.fs.FileSystem,
+      tp: org.apache.hadoop.fs.Path, before: TableLog.Commit.Stamp, own: Seq[Long],
+      written: org.apache.spark.sql.types.StructType, partCols: Seq[String]): Unit = {
+    val key = tp.toString
+    val alone = own.zipWithIndex.forall { case (id, i) => id == before.id + 1 + i }
+    Option(tableSchemaCache.get(key)).collect { case (`before`, s) if alone => s }.foreach { s =>
+      val known = s.fields.map(f => f.name -> f.dataType).toMap
+      val adds = written.fields.filterNot(f => partCols.contains(f.name))
+        .exists(f => !known.get(f.name).contains(f.dataType))
+      if (!adds) TableLog.commits(fs, tp)
+        .find(c => c.id == own.last && c.table == before.table)
+        .foreach(c => tableSchemaCache.replace(key, (before, s), (c.stamp, s)))
     }
   }
 
@@ -600,15 +678,15 @@ object StockStore {
     TableLog.commits(fs, tp).map(_.id)
   }
 
-  /** One snapshot of the commit log: (last commit id, absolute committed
+  /** One snapshot of the commit log: (last commit stamp, absolute committed
     * data files), or None if the table predates the log. Reading id and
     * file set from the SAME listing keeps the schema memo consistent when
     * a commit lands concurrently with a read. */
   private def committedState(fs: org.apache.hadoop.fs.FileSystem,
-      tp: org.apache.hadoop.fs.Path): Option[(Long, Seq[String])] = {
+      tp: org.apache.hadoop.fs.Path): Option[(TableLog.Commit.Stamp, Seq[String])] = {
     val cs = TableLog.commits(fs, tp)
     if (cs.isEmpty) None
-    else Some((cs.last.id, TableLog.effectiveFrom(cs)._1
+    else Some((cs.last.stamp, TableLog.effectiveFrom(cs)._1
       .map(r => new org.apache.hadoop.fs.Path(tp, r).toString)))
   }
 
@@ -689,28 +767,18 @@ object StockStore {
   private def tzMarkerPath(root: String, dt: StockDataType) =
     new org.apache.hadoop.fs.Path(s"$root/${dt.name}__tz")
 
-  // The marker is immutable once written (create-if-absent, never
-  // modified): memoize positive reads so the streaming sink pays the
-  // exists+open+read round-trip once per table, not once per micro-batch.
-  // Absence is NOT cached — the marker lands at this table's first
-  // publish.
-  private val tzMarkerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Read on every upsert, not memoized: a table dropped and recreated at
+  // the same path may be stamped with another tz, and the marker's status
+  // cannot tell (two tz names can have the same length, and the
+  // object-store binding reports mtime 0). A stat to validate a memo
+  // would cost as much as this one open (one GET on an object store).
   private def readTzMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
-    val key = fs.makeQualified(p).toString
-    val hit = tzMarkerCache.get(key)
-    if (hit != null) Some(hit)
-    else if (!fs.exists(p)) None
-    else {
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try {
       val in = fs.open(p)
-      val tz =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      tzMarkerCache.put(key, tz)
-      Some(tz)
-    }
-  }
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   private def writeTzMarkerIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, tz: String): Unit =

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.AbstractDataType
 /** Access shim for `private[sql]` Spark internals needed to expose custom
   * Catalyst expressions as user-facing Columns (the standard pattern for
   * Spark extension libraries — a bridge object inside the sql package
-  * namespace), plus the `private[spark]` listener-bus drain. Only pure
-  * adapters live here; all graft logic stays in the `graft.*` packages.
+  * namespace), plus the `private[spark]` listener-bus drain and schema
+  * nullability. Only pure adapters live here; all graft logic stays in
+  * the `graft.*` packages.
   */
 object GraftBridge {
   /** Wrap a Catalyst expression as a Column (Spark 4 classic API). */
@@ -32,6 +33,11 @@ object GraftBridge {
     * returned. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `StructType.asNullable` (`private[spark]`): the nullability Spark's
+    * file sources give a relation's data schema. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 
   type AbstractType = AbstractDataType
 }

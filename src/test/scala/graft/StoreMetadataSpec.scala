@@ -1,0 +1,248 @@
+package graft
+
+import graft.model.Streaming
+import graft.store.{ObjectStoreFileSystem, StockStore, TableLog}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.net.URI
+import java.util.concurrent.atomic.AtomicReference
+
+/** Parquet output committer that runs [[HookedCommitter.hook]] once, on
+  * the driver, as the next parquet write job commits. An upsert's stage
+  * writes run after its read-back and before its publish, so the hook
+  * lands another writer's commit inside that window. */
+class HookedCommitter(out: Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(out, ctx) {
+  override def commitJob(jc: JobContext): Unit = {
+    Option(HookedCommitter.hook.getAndSet(null)).foreach(_.apply())
+    super.commitJob(jc)
+  }
+}
+object HookedCommitter {
+  val hook = new AtomicReference[() => Unit]()
+}
+
+/** The store's per-process metadata: the manifest parse cache, the
+  * union-schema memo, the tz-marker cache and the per-table file-status
+  * cache. A streaming sink reads the table back every trigger, so the
+  * cost of building that read must follow the files a trigger wrote, and
+  * none of the caches may outlive the table they describe. */
+class StoreMetadataSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  private def fs(root: String) =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** One trade per (ticker, second) starting at `t0Ms`. */
+  private def ticks(tickers: Seq[String], t0Ms: Long, perTicker: Int,
+      price: Double): DataFrame = {
+    import spark.implicits._
+    (for (t <- tickers; i <- 0 until perTicker)
+      yield (t, new java.sql.Timestamp(t0Ms + i * 1000L), price + i, 5L))
+      .toDF("ticker", "timestamp", "price", "volume")
+  }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.select("ticker", "timestamp", "price", "volume", "version")
+      .collect().map(_.toString).toSeq.sorted
+
+  /** Jobs started in this thread's job group while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"store-metadata-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "store metadata spec")
+    try {
+      val r = body
+      GraftBridge.drainListenerBus(sc)
+      (r, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("a table dropped and recreated at the same path is read and merged as the new table") {
+    val root = SparkTestSession.tempDir("store-recreate")
+    // 02:30 UTC is the previous day in New York and the same day in Tokyo,
+    // so the two tzs stamp these rows into different day partitions
+    val t0 = java.time.Instant.parse("2025-07-02T02:30:00Z").toEpochMilli
+    val old = ticks(Seq("AAA", "BBB"), t0, 3, 10.0).withColumn("venue", lit("X"))
+    StockStore.upsert(spark, root, Streaming, old, exchangeTz = "America/New_York")
+    // a second upsert reads (and memoizes) the old table's tz marker
+    assert(StockStore.upsert(spark, root, Streaming, old, exchangeTz = "America/New_York")
+      .written == 0)
+    assert(StockStore.table(spark, root, Streaming).columns.contains("venue"))
+    assert(StockStore.table(spark, root, Streaming).count() == 6)
+
+    val f = fs(root)
+    assert(f.delete(new Path(root), true))
+    val fresh = ticks(Seq("CCC", "DDD", "EEE"), t0, 2, 20.0)
+    val first = StockStore.upsert(spark, root, Streaming, fresh, exchangeTz = "Asia/Tokyo")
+    assert(first.written == 6)
+    val read = StockStore.table(spark, root, Streaming)
+    assert(!read.columns.contains("venue"), "the old table's schema must not survive it")
+    assert(sorted(read) == sorted(fresh.withColumn("version", lit(1))))
+
+    // the recreated table is stamped Asia/Tokyo: a replay under the old
+    // table's tz must see the existing rows and write nothing
+    val replay = StockStore.upsert(spark, root, Streaming, fresh, exchangeTz = "America/New_York")
+    assert(replay.written == 0, s"replay wrote $replay")
+    assert(StockStore.table(spark, root, Streaming).count() == 6)
+  }
+
+  test("table() starts no Spark job after a schema-preserving upsert to a 33+ file store") {
+    val root = SparkTestSession.tempDir("store-nojobs")
+    val tickers = (0 until 12).map(i => f"T$i%02d")
+    val t0 = java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli
+    (0 until 3).foreach(k => StockStore.upsert(spark, root, Streaming,
+      ticks(tickers, t0 + k * 60000L, 4, 100.0 + k)))
+    val tp = new Path(s"$root/streaming")
+    assert(TableLog.effective(fs(root), tp)._1.size >= 33)
+    assert(TableLog.commits(fs(root), tp).size >= 3)
+    StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 3 * 60000L, 4, 200.0),
+      collectCounts = false)
+
+    val (df, jobs) = jobsDuring(StockStore.table(spark, root, Streaming))
+    assert(jobs == 0, s"building the table started $jobs Spark job(s)")
+    assert(df.count() == 12 * 4 * 4)
+    assert(df.columns.toSeq == StockStore.table(spark, root, Streaming).columns.toSeq)
+
+    // a batch that adds a column (A10) must not carry the memo forward
+    StockStore.upsert(spark, root, Streaming,
+      ticks(tickers.take(2), t0 + 4 * 60000L, 2, 300.0).withColumn("venue", lit("Y")))
+    val evolved = StockStore.table(spark, root, Streaming)
+    assert(evolved.columns.contains("venue"))
+    assert(evolved.filter(col("venue") === "Y").count() == 4)
+    assert(evolved.count() == 12 * 4 * 4 + 4)
+  }
+
+  test("a column another writer commits inside an upsert stays visible after it") {
+    val root = SparkTestSession.tempDir("store-foreign")
+    val tickers = Seq("AAA", "BBB")
+    val t0 = java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli
+    StockStore.upsert(spark, root, Streaming, ticks(tickers, t0, 3, 10.0))
+    StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 60000L, 3, 11.0))
+    assert(StockStore.table(spark, root, Streaming).count() == 12)
+
+    // the other writer's files: a store of its own, moved in by the hook
+    val side = SparkTestSession.tempDir("store-foreign-side")
+    StockStore.upsert(spark, side, Streaming,
+      ticks(Seq("CCC"), t0, 2, 30.0).withColumn("venue", lit("Y")))
+    val f = fs(root)
+    val tp = new Path(s"$root/streaming")
+    val sideTp = new Path(s"$side/streaming")
+    val foreign = TableLog.effective(f, sideTp)._1
+    val foreignId = new java.util.concurrent.atomic.AtomicLong(-1L)
+    HookedCommitter.hook.set { () =>
+      foreign.foreach { rel =>
+        f.mkdirs(new Path(tp, rel).getParent)
+        assert(f.rename(new Path(sideTp, rel), new Path(tp, rel)))
+      }
+      foreignId.set(TableLog.publish(f, tp, foreign, Nil))
+    }
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[HookedCommitter].getName)
+    try StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 120000L, 3, 12.0))
+    finally { spark.conf.unset(key); HookedCommitter.hook.set(null) }
+
+    val ids = TableLog.commits(f, tp).map(_.id)
+    assert(foreignId.get >= 0 && ids.last > foreignId.get,
+      s"the other writer's commit ${foreignId.get} must land before the upsert's (ids $ids)")
+    val read = StockStore.table(spark, root, Streaming)
+    assert(read.columns.contains("venue"), "the other writer's column was dropped")
+    assert(read.filter(col("venue") === "Y").count() == 2)
+    assert(read.count() == 20)
+  }
+
+  test("on graftos://, a table recreated with the same tickers and days is read as the new table") {
+    val server = new ObjectStoreServer
+    try {
+      ObjectStoreFileSystem.register(spark.sparkContext.hadoopConfiguration)
+      val osRoot = s"graftos://${server.endpointAuthority}/store"
+      val os = fs(osRoot)
+      val tp = new Path(s"$osRoot/streaming")
+      val t0 = java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli
+      // Each generation is written on the local FS and uploaded whole: the
+      // Spark stage write renames directories, which this binding lacks.
+      def generation(df: DataFrame): Seq[Long] = {
+        val local = SparkTestSession.tempDir("store-os-gen")
+        StockStore.upsert(spark, local, Streaming, df)
+        val localTp = new Path(s"$local/streaming")
+        val lf = fs(local)
+        os.delete(new Path(osRoot), true)
+        TableLog.listFilesRecursively(lf, localTp).filterNot(_.getName.endsWith(".crc"))
+          .foreach { p =>
+            val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri))
+            val out = os.create(new Path(tp,
+              p.toUri.getPath.stripPrefix(localTp.toUri.getPath + "/")), true)
+            try out.write(bytes) finally out.close()
+          }
+        os.listStatus(new Path(tp, "_commits")).filter(_.getPath.getName.endsWith(".commit"))
+          .sortBy(_.getPath.getName).map(_.getLen).toSeq
+      }
+      val oldLens = generation(ticks(Seq("AAA", "BBB"), t0, 3, 10.0).withColumn("venue", lit("X")))
+      val old = StockStore.table(spark, osRoot, Streaming)
+      assert(old.columns.contains("venue"))
+      assert(old.count() == 6)
+
+      val fresh = ticks(Seq("AAA", "BBB"), t0, 3, 20.0)
+      val freshLens = generation(fresh)
+      // same manifest names and lengths, and this binding reports mtime 0
+      assert(freshLens == oldLens)
+      assert(os.listStatus(new Path(tp, "_commits")).forall(_.getModificationTime == 0L))
+      val read = StockStore.table(spark, osRoot, Streaming)
+      assert(!read.columns.contains("venue"), "the old table's schema must not survive it")
+      assert(sorted(read) == sorted(fresh.withColumn("version", lit(1))))
+    } finally server.stop()
+  }
+
+  /** The walk against Hadoop's own recursive listing, as a set. */
+  private def assertSameListing(f: FileSystem, dir: Path): Unit = {
+    val it = f.listFiles(dir, true)
+    val viaListFiles = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).toSet
+    val walked = TableLog.listFilesRecursively(f, dir)
+    assert(walked.size == walked.toSet.size, "no file listed twice")
+    assert(walked.toSet == viaListFiles)
+    assert(viaListFiles.nonEmpty)
+  }
+
+  test("listFilesRecursively lists what listFiles(recursive) lists, on local FS and graftos://") {
+    val root = SparkTestSession.tempDir("store-listing")
+    StockStore.upsert(spark, root, Streaming,
+      ticks(Seq("AAA", "BBB"), java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli, 3, 1.0))
+    val local = fs(root)
+    local.mkdirs(new Path(s"$root/streaming/ticker=ZZZ/y=2025/m=7")) // empty leaf dir
+    assertSameListing(local, new Path(s"$root/streaming")) // partitions, _commits, .crc files
+    assertSameListing(local, new Path(root))
+    assert(TableLog.listFilesRecursively(local, new Path(s"$root/absent")).isEmpty)
+
+    val server = new ObjectStoreServer
+    try {
+      val conf = new Configuration()
+      ObjectStoreFileSystem.register(conf)
+      val osRoot = s"graftos://${server.endpointAuthority}"
+      val os = FileSystem.get(URI.create(osRoot + "/"), conf)
+      Seq("ticker=A/y=2025/m=7/d=1/p0.parquet", "ticker=A/y=2025/m=7/d=2/p1.parquet",
+          "ticker=B/y=2025/m=7/d=2/p2.parquet", "ticker=B/y=2025/m=8/d=1/p3.parquet",
+          "_commits/00000000000000000000.commit", "top.parquet").foreach { k =>
+        val out = os.create(new Path(s"$osRoot/t/$k"), false)
+        try out.write(k.getBytes) finally out.close()
+      }
+      assertSameListing(os, new Path(s"$osRoot/t"))
+      assert(TableLog.listFilesRecursively(os, new Path(s"$osRoot/t")).size == 6)
+    } finally server.stop()
+  }
+}
