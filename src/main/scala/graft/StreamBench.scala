@@ -335,7 +335,7 @@ object StreamBench {
         case "upsert" => ticks.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             sinkBatch(batch, b => StockStore.upsert(b.sparkSession, root, Streaming, b,
-              Exchanges.tz("US"), collectCounts = false))
+              Exchanges.tz("US")))
           }
         case "stateful" =>
           graft.streaming.StreamIngest.statefulVersionedTrades(ticks)

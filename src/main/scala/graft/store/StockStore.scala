@@ -31,6 +31,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   */
 object StockStore {
 
+  /** Exact counts of one [[upsert]]: batch rows in, new rows written,
+    * deduplicated rows already stored (A3), rows skipped for an all-null
+    * payload (A5), and written rows that took a version above 1 (A4). */
   final case class UpsertStats(input: Long, written: Long, exactDups: Long,
       nullSkipped: Long, versionConflicts: Long)
 
@@ -64,19 +67,15 @@ object StockStore {
   private def nullSafeEq(left: DataFrame, right: DataFrame, cols: Seq[String]): Column =
     cols.map(c => left(c) <=> right(c)).reduce(_ && _)
 
-  /** Read the stored table, or an empty frame with `schema` if absent.
-    * Existence probe goes through Hadoop FileSystem so the store works on
-    * HDFS/S3 paths too — a java.io.File probe would silently report
-    * "absent" there and make [[upsert]] treat a populated table as empty.
-    * `mergeSchema` unifies files written before/after a dynamic column
-    * arrived (A10) — older rows read back with the new column null. */
-  def readOrEmpty(spark: SparkSession, root: String, dt: StockDataType,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    readBack(spark, root, dt, schema)._1
-
-  /** [[readOrEmpty]] plus the stamp of the commit it read (None for an
-    * absent, empty or legacy table) — the upsert carries the schema memo
-    * forward from it after publishing ([[carrySchemaMemo]]). */
+  /** Read the stored table, or an empty frame with `schema` if absent,
+    * plus the stamp of the commit it read (None for an absent, empty or
+    * legacy table) — the upsert carries the schema memo forward from it
+    * after publishing ([[carrySchemaMemo]]). The existence probe goes
+    * through Hadoop FileSystem so the store works on HDFS/S3 paths too —
+    * a java.io.File probe would silently report "absent" there and make
+    * [[upsert]] treat a populated table as empty. The union schema
+    * (A10) reads rows written before a dynamic column arrived with that
+    * column null. */
   private def readBack(spark: SparkSession, root: String, dt: StockDataType,
       schema: org.apache.spark.sql.types.StructType)
       : (DataFrame, Option[TableLog.Commit.Stamp]) = {
@@ -94,39 +93,61 @@ object StockStore {
     }
   }
 
+  /** Touched partitions a batch may carry before the read-back prune
+    * degrades to a scan of every partition (a bulk backfill spanning the
+    * table's history). It bounds both the prune's IN-list and the
+    * tuple set the pin job funnels to the driver. */
+  private[store] val MaxPrunedPartitions = 4096
+
+  /** What the read-back prune matches partitions on: the xxhash64 of
+    * their values cast to string. The batch side hashes the computed
+    * calendar parts, the store side the inferred partition values, so an
+    * int on one side and a string on the other hash alike. */
+  private[store] def partitionHash(parts: Seq[Column]): Column =
+    xxhash64(parts.map(_.cast("string")): _*)
+
+  /** The read-back prune for the touched-partition hashes the pin job
+    * collected: None when the capped set overflowed (null) or is absent,
+    * so the merge scans every partition. A hash collision only adds a
+    * partition to the scan, and the predicate reads partition columns
+    * only, so it prunes the file listing, never a row. */
+  private[store] def partitionPrune(pruneCols: Seq[String], hashes: Any): Option[Column] =
+    hashes match {
+      case hs: scala.collection.Seq[_] => Some(partitionHash(pruneCols.map(col)).isin(hs.toSeq: _*))
+      case _ => None
+    }
+
   /** Deduplicating, versioning batch merge (the reference's
-    * `insert_many`, reference: sql_db.py:345-671). Returns write stats
-    * (the reference acks each message; we report counts).
+    * `insert_many`, reference: sql_db.py:345-671) and the store's one
+    * write path: bulk backfills and streaming micro-batches take the same
+    * plan, as the reference's single writer drains both through one
+    * insert (writer.py:259-353). Returns exact write stats (the reference
+    * acks each message; we report counts).
     *
-    * `collectCounts = false` is the high-trigger-rate mode for streaming
-    * sinks: the five diagnostic count actions (input/dups/null-skips/
-    * conflicts and the strict-index probe) are replaced by CollectMetrics
-    * observations riding the merge plan, all materialized by the stats
-    * job — the merge runs exactly two jobs per micro-batch (stats row +
-    * data) and still returns full stats on the common path (diagnostics
-    * degrade to -1 only when AQE's empty-relation propagation prunes the
-    * metrics, e.g. a replayed batch that merges to nothing). Merge
-    * semantics are identical, including the A6 strict-index FAILURE: the
-    * check is compiled into the filter as an assert_true guard, so a
-    * violating batch fails its first job, before anything is staged or
+    * The merge runs in four labelled steps: "touched tuples + batch pin"
+    * caches the deduplicated batch and fires every diagnostic
+    * observation (input, null skips, deduplicated rows, the event-time
+    * window and the capped touched-partition set); "merge + pin output";
+    * "stats rows", whose sum is `written`; and, only when something is
+    * new, "stage data write" before the manifest commit. The A6 index
+    * check is an assert_true guard compiled into the A5 filter, so a
+    * violating batch fails the first step, before anything is staged or
     * committed. */
   def upsert(spark: SparkSession, root: String, dt: StockDataType,
-      batch: DataFrame, exchangeTz: String = "America/New_York",
-      strictIndex: Boolean = true, collectCounts: Boolean = true): UpsertStats =
+      batch: DataFrame, exchangeTz: String = "America/New_York"): UpsertStats =
     writerLock(root, dt).synchronized {
-      upsertLocked(spark, root, dt, batch, exchangeTz, strictIndex, collectCounts)
+      upsertLocked(spark, root, dt, batch, exchangeTz)
     }
 
   private def upsertLocked(spark: SparkSession, root: String, dt: StockDataType,
-      batch: DataFrame, exchangeTz: String,
-      strictIndex: Boolean, collectCounts: Boolean): UpsertStats = {
+      batch: DataFrame, exchangeTz: String): UpsertStats = {
     val idxCols = dt.indexCols
     // A10 dynamic schema evolution: batch columns beyond the declared
     // payload schema are accepted as NEW payload columns (the reference's
     // ALTER TABLE ADD COLUMN, sql_db.py:306-343). They take part in
     // payload equality (A3) and versioning (A4) like any other payload
     // column, land in the new files, and older rows read back with the
-    // column null (mergeSchema in [[readOrEmpty]]/[[table]]) — the
+    // column null (the union schema of [[readBack]]/[[table]]) — the
     // columnar analog of the reference's null-backfilled ALTER TABLE.
     val declared = dt.payloadCols.filter(batch.columns.contains)
     val reserved = (dt.indexCols ++ dt.payloadCols ++ Seq("version", "y", "m", "d")).toSet
@@ -134,46 +155,27 @@ object StockStore {
     val payloadCols = declared ++ dynamic
     require(payloadCols.nonEmpty, s"batch has no payload columns for ${dt.name}")
 
-    val input = if (collectCounts) batch.count() else -1L
-
     val idxOk = idxCols.map(col(_).isNotNull).reduce(_ && _)
     val anyPayload = payloadCols.map(col(_).isNotNull).reduce(_ || _)
 
-    // Cheap mode (collectCounts=false): diagnostic counts ride the merge
-    // plan as CollectMetrics observations and materialize with the
-    // stats-row job — no extra actions. Best-effort: AQE's runtime
-    // empty-relation propagation can prune the CollectMetrics nodes from
-    // the final plan (e.g. a replayed batch whose merge output is empty),
-    // in which case the observation completes with an empty map and the
-    // affected diagnostics report -1.
-    import org.apache.spark.sql.Observation
-    val batchObs = if (collectCounts) None else Some(Observation())
-    val dedupObs = if (collectCounts) None else Some(Observation())
-    val verObs = if (collectCounts) None else Some(Observation())
-    val observedBatch = batchObs.map(o => batch.observe(o,
-      count(lit(1)).as("input"),
-      count(when(!idxOk, lit(1))).as("null_idx"),
-      count(when(idxOk && !anyPayload, lit(1))).as("null_payload")))
-      .getOrElse(batch)
-
-    // A6: required index columns present. Full mode probes with its own
-    // action; cheap mode compiles the check INTO the A5 filter via
-    // assert_true, so a violating row fails the first merge job (before
-    // anything is staged or committed) with zero extra actions — and
-    // unlike an observation it cannot be optimized away: a plan that
+    // A6: required index columns present, checked by an assert_true guard
+    // compiled into the A5 filter: a violating row fails the pin job,
+    // before anything is staged or committed, with no action of its own.
+    // Unlike an observation it cannot be optimized away: a plan that
     // never evaluates the guard is a plan with no rows, hence no
     // violations.
-    if (strictIndex && collectCounts && !batch.filter(!idxOk).isEmpty)
-      throw new IllegalArgumentException(s"batch contains rows with null index columns $idxCols")
-    val keepCond =
-      if (strictIndex && !collectCounts)
-        coalesce(
-          assert_true(idxOk, lit(s"batch contains rows with null index columns $idxCols")),
-          lit(true)) && anyPayload
-      else idxOk && anyPayload
+    // A5: skip rows whose entire payload is null.
+    val keepCond = coalesce(
+      assert_true(idxOk, lit(s"batch contains rows with null index columns $idxCols")),
+      lit(true)) && anyPayload
 
-    // A5: skip rows whose entire payload is null
-    val nonNull = observedBatch.filter(keepCond)
+    // Diagnostic counts ride the plan as CollectMetrics observations,
+    // all fired by the pin job below, so the stats cost no action of
+    // their own (an empty or all-skipped batch still reports its counts,
+    // UpsertPathSpec).
+    import org.apache.spark.sql.Observation
+    val batchObs = Observation()
+    val pinObs = Observation()
 
     // A3 (in-batch): identical (index, payload) rows collapse to one.
     // ONE index-keyed exchange up front, shared by the whole merge
@@ -181,22 +183,26 @@ object StockStore {
     // dropDuplicates' grouping keys (idx ++ payload) are a SUPERSET of
     // the idx partitioning (equal full keys ⇒ equal idx ⇒ same
     // partition), and the A4 version window's partitionBy(idx) is
-    // satisfied by the same exchange. The old shape hashed the dedup agg
-    // on the full (idx, payload) key, which satisfies neither the window
-    // nor the idx joins — the merge paid 4 idx-family exchanges per
-    // micro-batch where the shuffled bytes (the whole batch, once) only
-    // ever justified one. Values are partition-independent: the dedup
-    // keeps one of N identical rows, and the window's xxhash64 order is
-    // a per-row function.
+    // satisfied by the same exchange. Values are partition-independent:
+    // the dedup keeps one of N identical rows, and the window's xxhash64
+    // order is a per-row function.
     // (r13 A/B: swapping this cache for an eager localCheckpoint — to
     // truncate downstream plan analysis — was measured WORSE, min
     // 2.66 s/16 jobs vs 2.43 s/15 jobs same window: the extra eager
     // materialization wave costs more than the analysis it saves. The
     // cache stays. OPTIMIZATION_r13.md, change 3 item 4.)
-    val dedupedRaw = nonNull.repartition(idxCols.map(col): _*)
+    val deduped = batch
+      .observe(batchObs, count(lit(1)).as("input"),
+        count(when(!anyPayload, lit(1))).as("null_payload"))
+      .filter(keepCond)
+      .repartition(idxCols.map(col): _*)
       .dropDuplicates(idxCols ++ payloadCols)
-    val deduped = dedupObs.map(o => dedupedRaw.observe(o, count(lit(1)).as("n")))
-      .getOrElse(dedupedRaw).cache()
+      .cache()
+
+    // Both working caches release on EVERY exit path (A6 failures, IO
+    // errors mid-stage/publish) — a failed micro-batch must not leak
+    // executor storage for the life of the session.
+    try {
 
     // T7 partition geometry, needed both for the pruned read-back below
     // and for the output layout stamping further down.
@@ -216,10 +222,10 @@ object StockStore {
     // to the batch's own partition tuples: an index key's store rows can
     // only live in the partition its event time maps to (same local-
     // calendar stamping both sides), so reading any other partition is
-    // pure waste. The tuple set comes from one tiny driver action
-    // against the cached batch (bounded by tickers × calendar units
-    // touched); batches touching more than 4096 partitions (a
-    // full-history backfill) skip pruning and scan every partition.
+    // pure waste. The tuple set rides the pin job's observation, capped
+    // at [[MaxPrunedPartitions]] inside the aggregate (task buffers and
+    // the driver-bound result stay bounded at any batch size); a batch
+    // past the cap (a full-history backfill) scans every partition.
     // The prune bounds the rows the merge SCANS by the batch; building
     // the relation is metadata work over every committed file, which a
     // plain `spark.read` would make store-sized per trigger (a listing
@@ -251,9 +257,6 @@ object StockStore {
       case None => !markerFs.exists(new org.apache.hadoop.fs.Path(tablePath(root, dt)))
     }
     val pruneCols = if (tzConsistent) partCols else Seq("ticker")
-    // The event-time window bounds ride the SAME job as the tuple
-    // collect (CollectMetrics on the cached batch) — they used to be a
-    // second whole driver action per micro-batch.
     // job labels (guide §1.5): the merge's waves are attributable in the
     // UI and in perfbench's `store.job_s.*` spans (which match on these
     // descriptions) without guessing; thread-local, reset at the end
@@ -261,58 +264,25 @@ object StockStore {
       spark.sparkContext.setJobDescription(s"upsert[${dt.name}]: $desc")
       try body finally spark.sparkContext.setJobDescription(null)
     }
-    val twObs = Observation()
-    // Touched-tuple discovery, two shapes (cheap mode saves 2 AQE waves):
-    //  - full mode: the r12 form — distinct().limit(4097).collect(), its
-    //    own exchange + collect on top of the cache-filling job. Correct
-    //    at ANY batch size (a billion-row backfill's tuple set never
-    //    funnels through driver metrics).
-    //  - cheap (streaming) mode: the distinct tuple set rides the SAME
-    //    CollectMetrics observation as the ts-window min/max, and ONE
-    //    noop write materializes batch pin + all observations — the
-    //    separate distinct exchange and its waves disappear (touched
-    //    4 jobs → 2, OPTIMIZATION_r13.md change 7). Sound because cheap
-    //    mode is the admission-capped streaming contract: per-task
-    //    collect_set state is bounded by the batch's distinct (ticker,
-    //    calendar-unit) tuples, which the cap bounds.
     val tupleExprs = pruneCols.map {
       case "ticker" => col("ticker"); case "y" => py
       case "m" => pmo; case "d" => pda
     }
-    val touched: Seq[Seq[String]] =
-      if (collectCounts) labeled("touched partition tuples + batch pin") {
-        deduped
-          .observe(twObs,
-            min(col(dt.tsCol)).as("mn"), max(col(dt.tsCol)).as("mx"))
-          .select(tupleExprs.zip(pruneCols).map { case (e, n) => e.as(n) }: _*)
-          .distinct().limit(4097).collect()
-          .toSeq.map(r => pruneCols.indices.map(i => String.valueOf(r.get(i))))
-      } else {
-        labeled("touched tuples + batch pin") {
-          deduped
-            .observe(twObs,
-              min(col(dt.tsCol)).as("mn"), max(col(dt.tsCol)).as("mx"),
-              collect_set(struct(tupleExprs: _*)).as("tuples"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        // defensive getOrElse: AQE's empty-relation propagation can prune
-        // the CollectMetrics node (empty merge input) and the observation
-        // completes with an empty map (the r12 x7 lesson)
-        twObs.get.getOrElse("tuples", null) match {
-          case rows: scala.collection.Seq[_] => rows.toSeq.map {
-            case r: org.apache.spark.sql.Row =>
-              pruneCols.indices.map(i => String.valueOf(r.get(i)))
-          }
-          case _ => Seq.empty
-        }
-      }
-    // concat_ws SKIPS nulls while the driver side renders "null", so
-    // null parts are rendered explicitly to keep the two sides aligned.
-    val partitionPrune: Option[Column] =
-      if (touched.length > 4096 || touched.isEmpty) None
-      else Some(concat_ws("",
-          pruneCols.map(c => coalesce(col(c).cast("string"), lit("null"))): _*)
-        .isin(touched.map(_.mkString("")): _*))
+    // ONE noop write materializes the batch pin and every observation:
+    // the batch counts, the deduplicated row count, the event-time
+    // window and the touched-tuple hashes (OPTIMIZATION_r13.md change 7).
+    labeled("touched tuples + batch pin") {
+      deduped
+        .observe(pinObs, count(lit(1)).as("n"),
+          min(col(dt.tsCol)).as("mn"), max(col(dt.tsCol)).as("mx"),
+          graft.functions.AggFunctions.collectSetCapped(
+            partitionHash(tupleExprs), MaxPrunedPartitions).as("tuples"))
+        .write.format("noop").mode("overwrite").save()
+    }
+    val observed = batchObs.get ++ pinObs.get
+    def observedCount(k: String): Long = observed.getOrElse(k,
+      throw new IllegalStateException(s"upsert observation '$k' did not fire")).asInstanceOf[Long]
+    val prune = partitionPrune(pruneCols, observed.getOrElse("tuples", null))
     // Event-time window prune on the read-back scan, ON TOP of the
     // partition-tuple prune: a streaming feed lands every micro-batch
     // in the SAME (ticker, day) partitions, so the tuple prune alone
@@ -326,18 +296,12 @@ object StockStore {
     // window predicate is pushed to parquet, skipping every earlier
     // file by row-group stats. Batch rows always have non-null index
     // cols here (keepCond), so min/max are total over the batch and
-    // the prune can never hide a matching row. One extra tiny agg on
-    // the cached batch buys a scan bounded by the batch's time span
-    // instead of the partition's history.
-    // Skipped when the partition prune itself degraded to None (a
-    // >4096-partition bulk backfill): such a batch spans the table's
-    // whole history, the between-predicate would prune nothing, and
-    // the min/max agg is one whole Spark action per upsert — the prune
-    // pays only on the streaming path it was built for (round-10
-    // ADVICE).
-    val tsWindow: Option[Column] = partitionPrune.flatMap { _ =>
-      val m = twObs.get
-      (Option(m.getOrElse("mn", null)), Option(m.getOrElse("mx", null))) match {
+    // the prune can never hide a matching row. Skipped when the
+    // partition prune itself degraded (a bulk backfill past the cap):
+    // such a batch spans the table's whole history, and the
+    // between-predicate would prune nothing.
+    val tsWindow: Option[Column] = prune.flatMap { _ =>
+      (Option(observed.getOrElse("mn", null)), Option(observed.getOrElse("mx", null))) match {
         case (Some(lo), Some(hi)) =>
           Some(col(dt.tsCol).between(lit(lo), lit(hi)))
         case _ => None
@@ -345,7 +309,7 @@ object StockStore {
     }
     val (existingRaw0, readStamp) = readBack(spark, root, dt,
       deduped.withColumn("version", lit(1)).schema)
-    val existingRaw1 = partitionPrune
+    val existingRaw1 = prune
       .filter(_ => existingRaw0.columns.contains(pruneCols.last))
       .map(existingRaw0.where).getOrElse(existingRaw0)
     val existingRaw = tsWindow
@@ -360,18 +324,17 @@ object StockStore {
       if (df.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(batch.schema(c).dataType))
     }
-    // Batch-bounded broadcast sides (streaming path): when the
-    // partition-tuple prune holds (≤4096 touched partitions) and the
-    // batch is admission-capped (cheap mode, input unknown = -1) or
-    // provably small, every merge frame derived from the batch —
-    // distinct probe keys, the pruned read-back, its per-key max
-    // version — is bounded by BATCH size, not store size, so they ride
-    // the joins as broadcasts and the big side keeps its one idx
-    // partitioning instead of re-exchanging per join (guide §3.1). A
-    // bulk backfill (prune degraded, or a large full-counts batch)
-    // keeps the shuffle joins: its read-back is store-sized and must
-    // never be collected to the driver.
-    val smallBatch = partitionPrune.isDefined && (input < 0L || input <= 1000000L)
+    // Batch-bounded broadcast sides: when the partition-tuple prune holds
+    // and the deduplicated batch (counted by the pin job) is small, every
+    // merge frame derived from the batch — distinct probe keys, the
+    // pruned read-back, its per-key max version — is bounded by BATCH
+    // size, not store size, so they ride the joins as broadcasts and the
+    // big side keeps its one idx partitioning instead of re-exchanging
+    // per join (guide §3.1). A bulk backfill (prune degraded, or a large
+    // batch) keeps the shuffle joins: its read-back is store-sized and
+    // must never be collected to the driver.
+    val dedupedN = observedCount("n")
+    val smallBatch = prune.isDefined && dedupedN <= 1000000L
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (smallBatch) broadcast(df) else df
     val existing = existingAll
@@ -380,9 +343,6 @@ object StockStore {
       .select((idxCols ++ payloadCols :+ "version").map(col): _*)
       .cache()
 
-    // Both working caches release on EVERY exit path (A6 failures, IO
-    // errors mid-stage/publish) — a failed micro-batch must not leak
-    // executor storage for the life of the session.
     try {
 
     // A3 (vs store): drop rows whose payload already exists for the key.
@@ -399,45 +359,25 @@ object StockStore {
       .agg(max(col("version")).as("__maxv"))
     val w = Window.partitionBy(idxCols.map(col): _*)
       .orderBy(xxhash64(payloadCols.map(col): _*))
-    val versionedRaw = fresh
+    val versioned = fresh
       .join(maybeBroadcast(maxv), idxCols, "left")
       .withColumn("version",
         (coalesce(col("__maxv"), lit(0L)) + row_number().over(w)).cast("int"))
       .drop("__maxv")
-    val versioned = verObs.map(o => versionedRaw.observe(o,
-      count(when(col("version") === 1, lit(1))).as("v1")))
-      .getOrElse(versionedRaw)
 
     // T7: exchange-local calendar partition columns from event time
     // (eventTs/partCols defined with the pruned read-back above)
     val outLazy = versioned.withColumn("y", py).withColumn("m", pmo).withColumn("d", pda)
       .select((idxCols ++ payloadCols ++ Seq("version") ++ partCols.drop(1)).distinct.map(col): _*)
-    // Pin the merge output ONCE (eager localCheckpoint): every consumer
-    // below — counts, per-ticker stats, conflicts, and the data append
-    // itself — previously re-executed the whole merge pipeline
-    // (read-back scan + semi/anti joins + version window) from the
-    // deduped/existing caches: 2 full executions per streaming
-    // micro-batch, 4 on the full-counts path. A micro-batch's merge
-    // output is batch-bounded, so the pinned blocks are small at any
-    // store size; the pipeline now runs exactly once per upsert
-    // (guide §5: localCheckpoint to cut lineage / avoid recompute). In
-    // cheap mode the in-plan assert_true A6 guard fires HERE, still
-    // before anything is staged or committed. The blocks release via
-    // the context cleaner once the batch's frame is unreferenced.
+    // Pin the merge output ONCE (eager localCheckpoint): the stats rows
+    // and the data append both read it, and each would otherwise
+    // re-execute the whole merge pipeline (read-back scan + semi/anti
+    // joins + version window) from the deduped/existing caches. The
+    // pinned blocks hold only new rows, so they are small wherever the
+    // batch is (guide §5: localCheckpoint to cut lineage / avoid
+    // recompute). The blocks release via the context cleaner once the
+    // batch's frame is unreferenced.
     val out = labeled("merge + pin output")(outLazy.localCheckpoint(true))
-
-    // ALL stats counts must run before the data append below: the append
-    // invalidates the cached `existing` plan (recacheByPath) — with the
-    // merge output pinned above, downstream consumers read checkpoint
-    // blocks and can no longer be poisoned by that invalidation, but the
-    // counts stay ahead of the append anyway (they are part of the
-    // pre-commit stats row).
-    val written = if (collectCounts) out.count() else -1L
-    val dedupedN = if (collectCounts) deduped.count() else -1L
-    val nullSkipped = if (collectCounts) input - nonNull.count() else -1L
-    val conflicts =
-      if (collectCounts) written - out.filter(col("version") === 1).count()
-      else -1L
 
     // A12 transactional batch commit (reference: sql_db.py:455,553-557 —
     // BEGIN IMMEDIATE around the whole batch): data files and the batch's
@@ -448,9 +388,19 @@ object StockStore {
     // readers see the pre-batch state, and stats can never drift from
     // data. Readers merge the stats log (sum/min/max re-aggregate
     // losslessly) and never scan the data, however large the table grows.
-    var writtenFinal = written
-    var cheapStats: Option[UpsertStats] = None
-    if (!collectCounts || written > 0) {
+    // The per-ticker stats rows are tiny: they are collected (before the
+    // append, which invalidates the cached `existing` plan through
+    // recacheByPath) and give `written` and the first-version count, and
+    // the stats log then writes from the local relation.
+    val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
+    val statsDf = out.groupBy(statsKeys.map(col): _*)
+      .agg(count(lit(1)).as("row_count"),
+        min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"),
+        count(when(col("version") === 1, lit(1))).as("v1"))
+    val statsRows = labeled("stats rows")(statsDf.collect())
+    val written = statsRows.map(_.getAs[Long]("row_count")).sum
+    val firstVersions = statsRows.map(_.getAs[Long]("v1")).sum
+    if (written > 0) {
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
@@ -458,86 +408,56 @@ object StockStore {
       val stageId = java.util.UUID.randomUUID().toString
       val stageData = new org.apache.hadoop.fs.Path(root, s"${stagePrefix(dt)}$stageId-data")
       val stageStats = new org.apache.hadoop.fs.Path(root, s"${stagePrefix(dt)}$stageId-stats")
-
-      val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
-      val statsDf = out.groupBy(statsKeys.map(col): _*)
-        .agg(count(lit(1)).as("row_count"),
-          min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
-      if (collectCounts) {
-        statsDf.coalesce(1).write.parquet(stageStats.toString)
-      } else {
-        // cheap mode: the per-ticker stats rows are tiny — collect them
-        // (the mode's single extra action) and derive `written` from
-        // their sum; the local relation then writes without a job. The
-        // same action fires the observations (and the assert_true A6
-        // guard — a violating batch fails HERE, before anything is staged
-        // or committed).
-        val statsRows = labeled("stats rows")(statsDf.collect())
-        writtenFinal = statsRows.map(_.getAs[Long]("row_count")).sum
-        def metric(o: Option[Observation], key: String): Long =
-          o.flatMap(_.get.get(key)).map(_.asInstanceOf[Long]).getOrElse(-1L)
-        val inputN = metric(batchObs, "input")
-        val nullIdx = metric(batchObs, "null_idx")
-        val nullPay = metric(batchObs, "null_payload")
-        val dedupN = metric(dedupObs, "n")
-        val v1 = metric(verObs, "v1")
-        cheapStats = Some(UpsertStats(inputN, writtenFinal,
-          if (dedupN >= 0) dedupN - writtenFinal else -1L,
-          if (nullIdx >= 0 && nullPay >= 0) nullIdx + nullPay else -1L,
-          if (v1 >= 0) writtenFinal - v1 else -1L))
-        if (writtenFinal > 0) {
-          spark.createDataFrame(java.util.Arrays.asList(statsRows: _*), statsDf.schema)
-            .coalesce(1).write.parquet(stageStats.toString)
-        }
+      spark.createDataFrame(java.util.Arrays.asList(statsRows: _*), statsDf.schema)
+        .drop("v1").coalesce(1).write.parquet(stageStats.toString)
+      // Migration/genesis commit BEFORE promoting this batch: a
+      // pre-manifest table snapshots its legacy files into their own
+      // commit; a fresh table publishes an empty genesis commit. Either
+      // way the log exists from here on, so a crash between promote and
+      // publish leaves this batch's files UNREFERENCED (invisible,
+      // vacuumable) — a later run can never sweep a torn batch in as
+      // "legacy" data.
+      if (!TableLog.exists(fs, tp))
+        TableLog.publish(fs, tp,
+          TableLog.legacyFiles(fs, tp), TableLog.legacyFiles(fs, sp))
+      // Pin the table's partitioning tz on first publish; later upserts
+      // with a different tz fall back to ticker-only read-back pruning.
+      writeTzMarkerIfAbsent(fs, tzMarkerPath(root, dt), exchangeTz)
+      // One file per touched partition either way. A batch-bounded
+      // merge takes coalesce(1) — a NARROW op on the pinned checkpoint
+      // blocks, so the write costs no exchange and no AQE wave (the
+      // dynamic writer still splits by partition dir); a bulk backfill
+      // keeps the hash repartition, whose width the store-sized batch
+      // actually needs.
+      labeled("stage data write") {
+        (if (smallBatch) out.coalesce(1)
+         else out.repartition(partCols.map(col): _*))
+          .write
+          .partitionBy(partCols: _*)
+          .parquet(stageData.toString)
       }
-      if (writtenFinal != 0) {
-        // Migration/genesis commit BEFORE promoting this batch: a
-        // pre-manifest table snapshots its legacy files into their own
-        // commit; a fresh table publishes an empty genesis commit. Either
-        // way the log exists from here on, so a crash between promote and
-        // publish leaves this batch's files UNREFERENCED (invisible,
-        // vacuumable) — a later run can never sweep a torn batch in as
-        // "legacy" data.
-        if (!TableLog.exists(fs, tp))
-          TableLog.publish(fs, tp,
-            TableLog.legacyFiles(fs, tp), TableLog.legacyFiles(fs, sp))
-        // Pin the table's partitioning tz on first publish; later upserts
-        // with a different tz fall back to ticker-only read-back pruning.
-        writeTzMarkerIfAbsent(fs, tzMarkerPath(root, dt), exchangeTz)
-        // One file per touched partition either way. A batch-bounded
-        // streaming merge takes coalesce(1) — a NARROW op on the pinned
-        // checkpoint blocks, so the write costs no exchange and no AQE
-        // wave (the dynamic writer still splits by partition dir); a
-        // bulk backfill keeps the hash repartition, whose width the
-        // store-sized batch actually needs.
-        labeled("stage data write") {
-          (if (smallBatch) out.coalesce(1)
-           else out.repartition(partCols.map(col): _*))
-            .write
-            .partitionBy(partCols: _*)
-            .parquet(stageData.toString)
-        }
-        val dataRel = TableLog.promote(fs, stageData, tp)
-        val statsRel = TableLog.promote(fs, stageStats, sp)
-        val published = TableLog.publish(fs, tp, dataRel, statsRel)
-        // Manifest squash: a streaming sink lands one manifest per
-        // micro-batch and every read pays an O(commits) listing. Each
-        // AutoSquashEvery commits, fold the live set into one reset
-        // manifest (no data rewrite) and prune the superseded manifests —
-        // commit listing stays O(1) however long the stream runs.
-        val squash = TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery)
-        if (squash >= 0) TableLog.vacuum(fs, tp, sp)
-        readStamp.foreach(carrySchemaMemo(fs, tp, _,
-          if (squash >= 0) Seq(published, squash) else Seq(published),
-          out.schema, partCols))
-      }
+      val dataRel = TableLog.promote(fs, stageData, tp)
+      val statsRel = TableLog.promote(fs, stageStats, sp)
+      val published = TableLog.publish(fs, tp, dataRel, statsRel)
+      // Manifest squash: a streaming sink lands one manifest per
+      // micro-batch and every read pays an O(commits) listing. Each
+      // AutoSquashEvery commits, fold the live set into one reset
+      // manifest (no data rewrite) and prune the superseded manifests —
+      // commit listing stays O(1) however long the stream runs.
+      val squash = TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery)
+      if (squash >= 0) TableLog.vacuum(fs, tp, sp)
+      readStamp.foreach(carrySchemaMemo(fs, tp, _,
+        if (squash >= 0) Seq(published, squash) else Seq(published),
+        out.schema, partCols))
       fs.delete(stageData, true)
       fs.delete(stageStats, true)
     }
 
-    cheapStats.getOrElse(UpsertStats(input, writtenFinal,
-      if (collectCounts) dedupedN - written else -1L, nullSkipped, conflicts))
-    } finally { deduped.unpersist(); existing.unpersist() }
+    UpsertStats(input = observedCount("input"), written = written,
+      exactDups = dedupedN - written, nullSkipped = observedCount("null_payload"),
+      versionConflicts = written - firstVersions)
+    } finally existing.unpersist()
+    } finally deduped.unpersist()
   }
 
   /** Read the stored table (post-merge). Manifest-aware: only files a

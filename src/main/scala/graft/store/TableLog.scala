@@ -108,7 +108,7 @@ object TableLog {
     * never modified), so a successful parse can be memoized by qualified
     * path: [[commits]] then costs one directory listing instead of
     * O(live manifests) file opens — which a streaming upsert sink pays
-    * several times per micro-batch (readOrEmpty, read-back, exists,
+    * several times per micro-batch (read-back, exists, publish,
     * maybeCheckpoint), ramping with commit count until the next squash.
     * A hit counts only when the log's token and the listed length and
     * modification time match the parsed file's: a table dropped and

@@ -55,11 +55,10 @@ object StreamIngest {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          // collectCounts=false: per-micro-batch diagnostics would cost
-          // five extra driver actions per trigger; the sink needs only
-          // the merge itself (written count rides the write job)
+          // the store's one write path: its diagnostics ride the merge's
+          // own jobs as observations, so a trigger pays no count action
           StockStore.upsert(batch.sparkSession, root, Streaming, batch,
-            Exchanges.tz(exchange), collectCounts = false)
+            Exchanges.tz(exchange))
           ()
         }
       }

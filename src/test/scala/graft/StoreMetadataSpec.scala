@@ -6,10 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.parquet.hadoop.ParquetOutputCommitter
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.URI
@@ -54,26 +52,6 @@ class StoreMetadataSpec extends AnyFunSuite {
     df.select("ticker", "timestamp", "price", "volume", "version")
       .collect().map(_.toString).toSeq.sorted
 
-  /** Jobs started in this thread's job group while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"store-metadata-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    GraftBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "store metadata spec")
-    try {
-      val r = body
-      GraftBridge.drainListenerBus(sc)
-      (r, n.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
   test("a table dropped and recreated at the same path is read and merged as the new table") {
     val root = SparkTestSession.tempDir("store-recreate")
     // 02:30 UTC is the previous day in New York and the same day in Tokyo,
@@ -112,10 +90,9 @@ class StoreMetadataSpec extends AnyFunSuite {
     val tp = new Path(s"$root/streaming")
     assert(TableLog.effective(fs(root), tp)._1.size >= 33)
     assert(TableLog.commits(fs(root), tp).size >= 3)
-    StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 3 * 60000L, 4, 200.0),
-      collectCounts = false)
+    StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 3 * 60000L, 4, 200.0))
 
-    val (df, jobs) = jobsDuring(StockStore.table(spark, root, Streaming))
+    val (df, jobs) = SparkTestSession.jobsDuring(StockStore.table(spark, root, Streaming))
     assert(jobs == 0, s"building the table started $jobs Spark job(s)")
     assert(df.count() == 12 * 4 * 4)
     assert(df.columns.toSeq == StockStore.table(spark, root, Streaming).columns.toSeq)
