@@ -1,6 +1,6 @@
 package graft.corpus
 
-import graft.store.TableLog
+import graft.store.{InPlaceWrite, TableLog}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * predicates every training read filters on, so Catalyst prunes a
   * train-English read to exactly its directories — and become visible
   * atomically through the SAME [[graft.store.TableLog]] manifest
-  * protocol as the tick store: stage → promote → ONE publish. A crash
+  * protocol as the tick store: files written in place → ONE publish. A crash
   * mid-write leaves files unreferenced (invisible, vacuumable), never a
   * half-visible corpus; every snapshot's commit id is a pinnable,
   * reproducible training input ([[snapshotAt]]), so "which data did run
@@ -38,21 +38,15 @@ object CorpusStore {
     val spark = docs.sparkSession
     val tp = new Path(tablePath(root))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = if (docs.columns.contains("split")) docs else withSplit(docs)
-    val stage = new Path(tp, s"_staging/${java.util.UUID.randomUUID}")
+    val rows = if (docs.columns.contains("split")) docs else withSplit(docs)
     if (!TableLog.exists(fs, tp))
       TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp), Nil)
-    try {
-      staged
-        .repartition(col("split"), col("lang")) // one file per partition dir
-        .write
-        .partitionBy("split", "lang")
-        .parquet(stage.toString)
-      val rel = TableLog.promote(fs, stage, tp)
-      // reset commit: a snapshot REPLACES the live corpus (prior
-      // snapshots stay pinnable via snapshotAt until a vacuum)
-      TableLog.publish(fs, tp, rel, Nil, reset = true)
-    } finally fs.delete(stage, true)
+    val rel = InPlaceWrite.parquet(
+      rows.repartition(col("split"), col("lang")), // one file per partition dir
+      tp, Seq("split", "lang"))
+    // reset commit: a snapshot REPLACES the live corpus (prior
+    // snapshots stay pinnable via snapshotAt until a vacuum)
+    TableLog.publish(fs, tp, rel, Nil, reset = true)
   }
 
   /** The live committed corpus (partition columns inferred, so split/lang

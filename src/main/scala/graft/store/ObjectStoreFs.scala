@@ -39,8 +39,9 @@ import java.nio.charset.StandardCharsets
   *     throwing — the behavior [[TableLog.publish]] needs on a store
   *     with no empty-dir markers;
   *   - `rename` is GET+PUT+DELETE (non-atomic, like S3 CopyObject) —
-  *     fine for [[TableLog.promote]]'s unique task-output names, NEVER
-  *     a commit point (that is the manifest put's job).
+  *     never a commit point (that is the manifest put's job); the store's
+  *     own writes ([[InPlaceWrite]]) create files at their final keys and
+  *     rename nothing.
   */
 final class ObjectStoreFileSystem extends FileSystem {
   private var endpoint: String = _       // http://host:port

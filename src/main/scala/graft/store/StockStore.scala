@@ -5,7 +5,7 @@ import graft.model._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Partitioned columnar store with the reference writer's semantics
   * (SURVEY §2.3 A1–A13), re-expressed as one idempotent batch merge:
@@ -54,8 +54,10 @@ object StockStore {
   private def writerLock(root: String, dt: StockDataType): Object =
     writerLocks.computeIfAbsent(tablePath(root, dt), _ => new Object)
 
-  /** Staging dirs are table-scoped so one table's vacuum can never sweep
-    * a sibling table's in-flight stage under the same root. */
+  /** Stage dirs (`root/stage-<dataType>-*`) are what writers before
+    * [[InPlaceWrite]] staged into; a crashed one can still sit in an older
+    * store, and [[compact]]'s vacuum sweeps it. Table-scoped, so one
+    * table's sweep never touches a sibling table's. */
   private def stagePrefix(dt: StockDataType) = s"stage-${dt.name}-"
 
   /** Squash cadence for [[upsert]]'s manifest log ([[TableLog
@@ -63,9 +65,6 @@ object StockStore {
     * log folds to one reset commit. 64 bounds read-side listing while
     * keeping the squash (an O(files) vacuum) amortized across batches. */
   val AutoSquashEvery: Int = 64
-
-  private def nullSafeEq(left: DataFrame, right: DataFrame, cols: Seq[String]): Column =
-    cols.map(c => left(c) <=> right(c)).reduce(_ && _)
 
   /** Read the stored table, or an empty frame with `schema` if absent,
     * plus the stamp of the commit it read (None for an absent, empty or
@@ -127,12 +126,15 @@ object StockStore {
     * The merge runs in four labelled steps: "touched tuples + batch pin"
     * caches the deduplicated batch and fires every diagnostic
     * observation (input, null skips, deduplicated rows, the event-time
-    * window and the capped touched-partition set); "merge + pin output";
-    * "stats rows", whose sum is `written`; and, only when something is
-    * new, "stage data write" before the manifest commit. The A6 index
-    * check is an assert_true guard compiled into the A5 filter, so a
-    * violating batch fails the first step, before anything is staged or
-    * committed. */
+    * window and the capped touched-partition set) — a batch that keeps
+    * no row returns its stats right there; "merge + pin output", one
+    * exchange over the batch and its pruned read-back, whose observation
+    * counts the rows to write and their first versions; then, only when
+    * something is new, "stats rows" and "stage data write" write the
+    * stats-log and data files in place ([[InPlaceWrite]]), and one
+    * manifest publishes them. The A6 index check is an assert_true guard
+    * compiled into the A5 filter, so a violating batch fails the first
+    * step, before anything is written or committed. */
   def upsert(spark: SparkSession, root: String, dt: StockDataType,
       batch: DataFrame, exchangeTz: String = "America/New_York"): UpsertStats =
     writerLock(root, dt).synchronized {
@@ -160,7 +162,7 @@ object StockStore {
 
     // A6: required index columns present, checked by an assert_true guard
     // compiled into the A5 filter: a violating row fails the pin job,
-    // before anything is staged or committed, with no action of its own.
+    // before anything is written or committed, with no action of its own.
     // Unlike an observation it cannot be optimized away: a plan that
     // never evaluates the guard is a plan with no rows, hence no
     // violations.
@@ -170,37 +172,39 @@ object StockStore {
       lit(true)) && anyPayload
 
     // Diagnostic counts ride the plan as CollectMetrics observations,
-    // all fired by the pin job below, so the stats cost no action of
+    // fired by the two pin jobs below, so the stats cost no action of
     // their own (an empty or all-skipped batch still reports its counts,
     // UpsertPathSpec).
     import org.apache.spark.sql.Observation
     val batchObs = Observation()
     val pinObs = Observation()
+    val outObs = Observation()
 
     // A3 (in-batch): identical (index, payload) rows collapse to one.
-    // ONE index-keyed exchange up front, shared by the whole merge
-    // (guide §2.4: operations keyed the same way share an exchange):
     // dropDuplicates' grouping keys (idx ++ payload) are a SUPERSET of
     // the idx partitioning (equal full keys ⇒ equal idx ⇒ same
-    // partition), and the A4 version window's partitionBy(idx) is
-    // satisfied by the same exchange. Values are partition-independent:
-    // the dedup keeps one of N identical rows, and the window's xxhash64
-    // order is a per-row function.
+    // partition), so the idx-keyed exchange serves the dedup; the merge
+    // below re-exchanges the cached rows together with the read-back.
+    // The dedup keeps one of N identical rows, whichever partition holds
+    // them.
     // (r13 A/B: swapping this cache for an eager localCheckpoint — to
     // truncate downstream plan analysis — was measured WORSE, min
     // 2.66 s/16 jobs vs 2.43 s/15 jobs same window: the extra eager
     // materialization wave costs more than the analysis it saves. The
     // cache stays. OPTIMIZATION_r13.md, change 3 item 4.)
+    // The batch counts are observed after the exchange: a batch with no
+    // partitions (a streaming source's empty trigger) runs no task
+    // before it, and an observation there would never fire.
     val deduped = batch
+      .repartition(idxCols.map(col): _*)
       .observe(batchObs, count(lit(1)).as("input"),
         count(when(!anyPayload, lit(1))).as("null_payload"))
       .filter(keepCond)
-      .repartition(idxCols.map(col): _*)
       .dropDuplicates(idxCols ++ payloadCols)
       .cache()
 
-    // Both working caches release on EVERY exit path (A6 failures, IO
-    // errors mid-stage/publish) — a failed micro-batch must not leak
+    // The batch cache releases on EVERY exit path (A6 failures, IO
+    // errors mid-write/publish) — a failed micro-batch must not leak
     // executor storage for the life of the session.
     try {
 
@@ -217,8 +221,7 @@ object StockStore {
       case Streaming => Seq("ticker", "y", "m", "d")
     }
 
-    // Existing rows for just the touched index keys (left-semi keeps the
-    // probe proportional to the batch). The SCAN is additionally pruned
+    // Existing rows for the batch's keys: the read-back SCAN is pruned
     // to the batch's own partition tuples: an index key's store rows can
     // only live in the partition its event time maps to (same local-
     // calendar stamping both sides), so reading any other partition is
@@ -282,7 +285,24 @@ object StockStore {
     val observed = batchObs.get ++ pinObs.get
     def observedCount(k: String): Long = observed.getOrElse(k,
       throw new IllegalStateException(s"upsert observation '$k' did not fire")).asInstanceOf[Long]
+    val dedupedN = observedCount("n")
+    // A batch that keeps no row (empty, all skipped) has its exact stats
+    // now: nothing to read back, merge or write.
+    if (dedupedN == 0) return UpsertStats(input = observedCount("input"), written = 0,
+      exactDups = 0, nullSkipped = observedCount("null_payload"), versionConflicts = 0)
     val prune = partitionPrune(pruneCols, observed.getOrElse("tuples", null))
+    // A batch-bounded merge (the partition-tuple prune holds, and the
+    // deduplicated batch is small) exchanges by ticker alone, into one
+    // task per core (at most one per touched partition), so each
+    // partition directory belongs to exactly one task and the pinned
+    // output writes in parallel, one file per touched partition, with no
+    // further exchange. A bulk backfill keeps the idx exchange and the
+    // write's hash repartition, whose width its store-sized batch needs.
+    val smallBatch = prune.isDefined && dedupedN <= 1000000L
+    val mergeTasks = observed.get("tuples").collect {
+      case hs: scala.collection.Seq[_] if smallBatch =>
+        math.max(1, math.min(spark.sparkContext.defaultParallelism, hs.size))
+    }
     // Event-time window prune on the read-back scan, ON TOP of the
     // partition-tuple prune: a streaming feed lands every micro-batch
     // in the SAME (ticker, day) partitions, so the tuple prune alone
@@ -324,120 +344,78 @@ object StockStore {
       if (df.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(batch.schema(c).dataType))
     }
-    // Batch-bounded broadcast sides: when the partition-tuple prune holds
-    // and the deduplicated batch (counted by the pin job) is small, every
-    // merge frame derived from the batch — distinct probe keys, the
-    // pruned read-back, its per-key max version — is bounded by BATCH
-    // size, not store size, so they ride the joins as broadcasts and the
-    // big side keeps its one idx partitioning instead of re-exchanging
-    // per join (guide §3.1). A bulk backfill (prune degraded, or a large
-    // batch) keeps the shuffle joins: its read-back is store-sized and
-    // must never be collected to the driver.
-    val dedupedN = observedCount("n")
-    val smallBatch = prune.isDefined && dedupedN <= 1000000L
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
-    val existing = existingAll
-      .join(maybeBroadcast(deduped.select(idxCols.map(col): _*).distinct()),
-        idxCols, "left_semi")
-      .select((idxCols ++ payloadCols :+ "version").map(col): _*)
-      .cache()
-
-    try {
-
-    // A3 (vs store): drop rows whose payload already exists for the key.
-    // Null-safe equality: disjoint-null trade/quote payloads compare
-    // correctly (reference: sql_db.py:485-492).
-    val fresh = deduped.join(maybeBroadcast(existing),
-      nullSafeEq(deduped, existing, idxCols ++ payloadCols), "left_anti")
-
-    // A4: version = max(existing)+rank within key. Within-batch conflict
-    // order uses a deterministic payload-hash sort (the reference uses
-    // arrival order; a distributed batch has no arrival order, so we make
-    // replay-stable ordering explicit).
-    val maxv = existing.groupBy(idxCols.map(col): _*)
-      .agg(max(col("version")).as("__maxv"))
-    val w = Window.partitionBy(idxCols.map(col): _*)
-      .orderBy(xxhash64(payloadCols.map(col): _*))
-    val versioned = fresh
-      .join(maybeBroadcast(maxv), idxCols, "left")
-      .withColumn("version",
-        (coalesce(col("__maxv"), lit(0L)) + row_number().over(w)).cast("int"))
-      .drop("__maxv")
+    val versioned = windowMerge(deduped, existingAll, idxCols, payloadCols, mergeTasks)
 
     // T7: exchange-local calendar partition columns from event time
     // (eventTs/partCols defined with the pruned read-back above)
     val outLazy = versioned.withColumn("y", py).withColumn("m", pmo).withColumn("d", pda)
       .select((idxCols ++ payloadCols ++ Seq("version") ++ partCols.drop(1)).distinct.map(col): _*)
     // Pin the merge output ONCE (eager localCheckpoint): the stats rows
-    // and the data append both read it, and each would otherwise
-    // re-execute the whole merge pipeline (read-back scan + semi/anti
-    // joins + version window) from the deduped/existing caches. The
-    // pinned blocks hold only new rows, so they are small wherever the
-    // batch is (guide §5: localCheckpoint to cut lineage / avoid
-    // recompute). The blocks release via the context cleaner once the
-    // batch's frame is unreferenced.
-    val out = labeled("merge + pin output")(outLazy.localCheckpoint(true))
+    // and the data write both read it, and each would otherwise
+    // re-execute the whole merge (read-back scan, exchange, windows).
+    // The pinned blocks hold only new rows, so they are small wherever
+    // the batch is (guide §5: localCheckpoint to cut lineage / avoid
+    // recompute); they release via the context cleaner once the batch's
+    // frame is unreferenced. The same job observes `written` and the
+    // first-version count.
+    val out = labeled("merge + pin output") {
+      outLazy.observe(outObs, count(lit(1)).as("written"),
+        count(when(col("version") === 1, lit(1))).as("v1")).localCheckpoint(true)
+    }
+    val written = outObs.get("written").asInstanceOf[Long]
+    val firstVersions = outObs.get("v1").asInstanceOf[Long]
 
     // A12 transactional batch commit (reference: sql_db.py:455,553-557 —
     // BEGIN IMMEDIATE around the whole batch): data files and the batch's
     // A7/A8 stats-log row (the reference's O(1) running min/max/count
-    // maintenance, sql_db.py:34-40,559-669) are STAGED, moved into place,
-    // and made visible by one atomic manifest rename ([[TableLog]]). A
-    // crash anywhere before that rename leaves only unreferenced files —
-    // readers see the pre-batch state, and stats can never drift from
-    // data. Readers merge the stats log (sum/min/max re-aggregate
-    // losslessly) and never scan the data, however large the table grows.
-    // The per-ticker stats rows are tiny: they are collected (before the
-    // append, which invalidates the cached `existing` plan through
-    // recacheByPath) and give `written` and the first-version count, and
-    // the stats log then writes from the local relation.
-    val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
-    val statsDf = out.groupBy(statsKeys.map(col): _*)
-      .agg(count(lit(1)).as("row_count"),
-        min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"),
-        count(when(col("version") === 1, lit(1))).as("v1"))
-    val statsRows = labeled("stats rows")(statsDf.collect())
-    val written = statsRows.map(_.getAs[Long]("row_count")).sum
-    val firstVersions = statsRows.map(_.getAs[Long]("v1")).sum
+    // maintenance, sql_db.py:34-40,559-669) are written in place, into
+    // their final directories ([[InPlaceWrite]]), and made visible
+    // together by one atomic manifest create ([[TableLog]]). A crash
+    // anywhere before that create leaves only unreferenced files —
+    // readers see the pre-batch state, stats can never drift from data,
+    // and [[TableLog.vacuum]] (run under this table's writer lock)
+    // reclaims them. Readers merge the stats log (sum/min/max
+    // re-aggregate losslessly) and never scan the data, however large
+    // the table grows.
     if (written > 0) {
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
       val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
-      val stageId = java.util.UUID.randomUUID().toString
-      val stageData = new org.apache.hadoop.fs.Path(root, s"${stagePrefix(dt)}$stageId-data")
-      val stageStats = new org.apache.hadoop.fs.Path(root, s"${stagePrefix(dt)}$stageId-stats")
-      spark.createDataFrame(java.util.Arrays.asList(statsRows: _*), statsDf.schema)
-        .drop("v1").coalesce(1).write.parquet(stageStats.toString)
-      // Migration/genesis commit BEFORE promoting this batch: a
-      // pre-manifest table snapshots its legacy files into their own
-      // commit; a fresh table publishes an empty genesis commit. Either
-      // way the log exists from here on, so a crash between promote and
-      // publish leaves this batch's files UNREFERENCED (invisible,
-      // vacuumable) — a later run can never sweep a torn batch in as
-      // "legacy" data.
-      if (!TableLog.exists(fs, tp))
-        TableLog.publish(fs, tp,
-          TableLog.legacyFiles(fs, tp), TableLog.legacyFiles(fs, sp))
+      ensureLog(fs, tp, sp)
       // Pin the table's partitioning tz on first publish; later upserts
       // with a different tz fall back to ticker-only read-back pruning.
       writeTzMarkerIfAbsent(fs, tzMarkerPath(root, dt), exchangeTz)
+      // The per-ticker stats rows, one file. A batch-bounded merge
+      // aggregates its pinned output on one partition, which satisfies
+      // the grouping, so the aggregate adds no exchange. Both writes read
+      // only the pinned output, so the stats job runs beside the data
+      // write, from a thread of its own that inherits this thread's job
+      // properties (the trigger's batch id, tags); the publish waits for
+      // both, and a failure of either fails the upsert.
+      val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
+      val statsWrite = new java.util.concurrent.FutureTask[Seq[String]](() => labeled("stats rows") {
+        InPlaceWrite.parquet((if (smallBatch) out.coalesce(1) else out)
+          .groupBy(statsKeys.map(col): _*)
+          .agg(count(lit(1)).as("row_count"),
+            min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
+          .coalesce(1), sp, Nil)
+      })
+      new Thread(statsWrite, s"upsert-stats-${dt.name}").start()
       // One file per touched partition either way. A batch-bounded
-      // merge takes coalesce(1) — a NARROW op on the pinned checkpoint
-      // blocks, so the write costs no exchange and no AQE wave (the
-      // dynamic writer still splits by partition dir); a bulk backfill
-      // keeps the hash repartition, whose width the store-sized batch
-      // actually needs.
-      labeled("stage data write") {
-        (if (smallBatch) out.coalesce(1)
-         else out.repartition(partCols.map(col): _*))
-          .write
-          .partitionBy(partCols: _*)
-          .parquet(stageData.toString)
+      // merge writes its pinned output as it lies — clustered by ticker,
+      // so the write costs no exchange and no AQE wave, and its tasks
+      // write disjoint partition dirs side by side; a bulk backfill
+      // keeps the hash repartition. The label predates the in-place
+      // write.
+      val dataRel = try labeled("stage data write") {
+        InPlaceWrite.parquet(
+          if (smallBatch) out else out.repartition(partCols.map(col): _*),
+          tp, partCols)
+      } catch { case t: Throwable => scala.util.Try(statsWrite.get()); throw t }
+      val statsRel = try statsWrite.get() catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
-      val dataRel = TableLog.promote(fs, stageData, tp)
-      val statsRel = TableLog.promote(fs, stageStats, sp)
       val published = TableLog.publish(fs, tp, dataRel, statsRel)
       // Manifest squash: a streaming sink lands one manifest per
       // micro-batch and every read pays an O(commits) listing. Each
@@ -449,15 +427,50 @@ object StockStore {
       readStamp.foreach(carrySchemaMemo(fs, tp, _,
         if (squash >= 0) Seq(published, squash) else Seq(published),
         out.schema, partCols))
-      fs.delete(stageData, true)
-      fs.delete(stageStats, true)
     }
 
     UpsertStats(input = observedCount("input"), written = written,
       exactDups = dedupedN - written, nullSkipped = observedCount("null_payload"),
       versionConflicts = written - firstVersions)
-    } finally existing.unpersist()
     } finally deduped.unpersist()
+  }
+
+  /** The A3/A4 merge of a deduplicated batch against its stored rows,
+    * both with `idxCols ++ payloadCols` (and `version` on the stored
+    * side): the batch rows whose payload is not stored for their key,
+    * each with its version. One exchange carries both sides — by
+    * `idxCols`, or by ticker alone into `tasks` partitions (a key's rows
+    * share its ticker, so that clustering serves every window too) — and
+    * three windows over it decide:
+    *  - over (idx, payload): whether the row is stored already (A3 vs
+    *    store). Window keys group nulls together, and Catalyst
+    *    normalizes ±0.0 and NaN in window partition keys as in join keys,
+    *    so this equals the reference's null-safe payload equality
+    *    (sql_db.py:485-492);
+    *  - over idx: the key's max stored version;
+    *  - over idx, on the new rows that are left: `row_number` by the
+    *    payload's xxhash64 — A4's version = max + rank. The reference
+    *    ranks by arrival order; a distributed batch has none, so the
+    *    replay-stable order is explicit.
+    * The stored side takes the batch's column types, as the null-safe
+    * comparison coerced it. */
+  private def windowMerge(deduped: DataFrame, stored: DataFrame,
+      idxCols: Seq[String], payloadCols: Seq[String], tasks: Option[Int]): DataFrame = {
+    val fields = idxCols ++ payloadCols
+    val idx = idxCols.map(col)
+    val fresh = deduped.select(fields.map(col) ++
+      Seq(lit(null).cast("int").as("version"), lit(false).as("__stored")): _*)
+    val old = stored.select(fields.map(c => col(c).cast(deduped.schema(c).dataType).as(c)) ++
+      Seq(col("version").cast("int").as("version"), lit(true).as("__stored")): _*)
+    val byKey = Window.partitionBy(idx: _*)
+    val both = fresh.unionByName(old)
+    tasks.fold(both.repartition(idx: _*))(n => both.repartition(n, col("ticker")))
+      .withColumn("__twin", max(col("__stored")).over(Window.partitionBy(fields.map(col): _*)))
+      .withColumn("__maxv", max(col("version")).over(byKey))
+      .where(!col("__stored") && !col("__twin"))
+      .withColumn("version", (coalesce(col("__maxv"), lit(0)) +
+        row_number().over(byKey.orderBy(xxhash64(payloadCols.map(col): _*)))).cast("int"))
+      .select((fields :+ "version").map(col): _*)
   }
 
   /** Read the stored table (post-merge). Manifest-aware: only files a
@@ -490,9 +503,9 @@ object StockStore {
   // One FileStatusCache client for every table. Committed files are
   // immutable and carry job-unique absolute paths, so a status seen once
   // stays right for as long as a manifest references the path; reads
-  // then stat only files this process has not seen (serially, below
-  // Spark's 32-path parallel listing threshold for any one trigger's
-  // files). The entries live in Spark's shared, size-bounded cache.
+  // then list only the partition directories of files this process has
+  // not seen ([[cacheStatuses]]). The entries live in Spark's shared,
+  // size-bounded cache.
   private var fileStatusCache: org.apache.spark.sql.execution.datasources.FileStatusCache = _
   private def fileStatuses(spark: SparkSession) = synchronized {
     if (fileStatusCache == null) fileStatusCache =
@@ -504,7 +517,8 @@ object StockStore {
     * `spark.read.parquet(files)` builds it — an [[org.apache.spark.sql
     * .execution.datasources.InMemoryFileIndex]] under a
     * `HadoopFsRelation` — but with the shared status cache and the
-    * memoized schema, so it neither globs nor lists what it has seen. */
+    * memoized schema, so it neither globs nor lists what it has seen,
+    * and starts no listing job for what it has not. */
   private def tableFromState(spark: SparkSession, tp: org.apache.hadoop.fs.Path,
       state: (TableLog.Commit.Stamp, Seq[String])): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
@@ -513,8 +527,10 @@ object StockStore {
     val key = tp.toString
     val opts = Map("basePath" -> key)
     val memo = Option(tableSchemaCache.get(key)).collect { case (`stamp`, s) => s }
-    val index = new InMemoryFileIndex(spark, files.map(new org.apache.hadoop.fs.Path(_)),
-      opts, memo, fileStatuses(spark))
+    val paths = files.map(new org.apache.hadoop.fs.Path(_))
+    cacheStatuses(tp.getFileSystem(spark.sparkContext.hadoopConfiguration), paths,
+      fileStatuses(spark))
+    val index = new InMemoryFileIndex(spark, paths, opts, memo, fileStatuses(spark))
     // spark.read fails on a path that does not exist; the index alone
     // would skip a missing root path without a word
     val leaves = index.allFiles()
@@ -536,6 +552,27 @@ object StockStore {
     if (memo.isEmpty) tableSchemaCache.put(key, (stamp, df.schema))
     df
   }
+
+  /** Put the status of every committed file `cache` lacks, from one
+    * `listStatus` per partition directory that holds any. Left to the
+    * index, more than 32 unseen files start Spark's parallel listing job,
+    * one task per file (8.4 s at 600 files on a 4-core host). Only the
+    * committed paths go in: an orphan beside them stays unlisted, and a
+    * committed file that is missing stays out, so the index looks for it
+    * and the read fails as before. */
+  private def cacheStatuses(fs: org.apache.hadoop.fs.FileSystem,
+      files: Seq[org.apache.hadoop.fs.Path],
+      cache: org.apache.spark.sql.execution.datasources.FileStatusCache): Unit =
+    files.filter(cache.getLeafFiles(_).isEmpty).groupBy(_.getParent).foreach { case (dir, ps) =>
+      val wanted = ps.map(p => p.toUri.getPath -> p).toMap
+      val listed = try fs.listStatus(dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+      listed.foreach { st =>
+        wanted.get(st.getPath.toUri.getPath).foreach(p => cache.putLeafFiles(p,
+          Array(new org.apache.hadoop.fs.FileStatus(st.getLen, false, st.getReplication,
+            st.getBlockSize, st.getModificationTime, st.getPath))))
+      }
+    }
 
   /** After an upsert publishes, move the schema memo from the commit its
     * read-back saw (`before`) to the upsert's own last commit — only when
@@ -625,38 +662,40 @@ object StockStore {
 
   private def compactLocked(spark: SparkSession, root: String, dt: StockDataType): Long = {
     import org.apache.hadoop.fs.Path
-    val df = table(spark, root, dt)
-    val partCols = Seq("ticker", "y", "m", "d").filter(df.columns.contains)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tp = new Path(tablePath(root, dt))
     val sp = new Path(statsLogPath(root, dt))
-    val stageId = java.util.UUID.randomUUID().toString
-    val stageData = new Path(root, s"${stagePrefix(dt)}$stageId-data")
-    val stageStats = new Path(root, s"${stagePrefix(dt)}$stageId-stats")
-
-    df.repartition(partCols.map(col): _*)
-      .write
-      .partitionBy(partCols: _*)
-      .parquet(stageData.toString)
-    val rows = spark.read.parquet(stageData.toString).count()
+    ensureLog(fs, tp, sp)
+    val df = table(spark, root, dt)
+    val partCols = Seq("ticker", "y", "m", "d").filter(df.columns.contains)
+    val written = org.apache.spark.sql.Observation()
+    val dataRel = InPlaceWrite.parquet(
+      df.repartition(partCols.map(col): _*).observe(written, count(lit(1)).as("rows")),
+      tp, partCols)
     // consolidated stats log: one row per key over the full table, same
     // written-rows semantics the per-batch log accumulates
     val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
-    df.groupBy(statsKeys.map(col): _*)
+    val statsRel = InPlaceWrite.parquet(df.groupBy(statsKeys.map(col): _*)
       .agg(count(lit(1)).as("row_count"),
         min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
-      .coalesce(1)
-      .write.parquet(stageStats.toString)
-
-    val dataRel = TableLog.promote(fs, stageData, tp)
-    val statsRel = TableLog.promote(fs, stageStats, sp)
+      .coalesce(1), sp, Nil)
     TableLog.publish(fs, tp, dataRel, statsRel, reset = true)
-    fs.delete(stageData, true)
-    fs.delete(stageStats, true)
     TableLog.vacuum(fs, tp, sp, stageRoot = Some(new Path(root)),
       stagePrefix = stagePrefix(dt))
-    rows
+    written.get("rows").asInstanceOf[Long]
   }
+
+  /** Migration/genesis commit, published BEFORE a writer puts files in
+    * the table's directories: a pre-manifest table snapshots its legacy
+    * files into their own commit; a fresh table publishes an empty
+    * genesis commit. Either way the log exists from here on, so a crash
+    * between a write and its publish leaves the written files
+    * UNREFERENCED (invisible, vacuumable) — a later run can never sweep
+    * a torn batch in as "legacy" data. */
+  private def ensureLog(fs: org.apache.hadoop.fs.FileSystem, tp: org.apache.hadoop.fs.Path,
+      sp: org.apache.hadoop.fs.Path): Unit =
+    if (!TableLog.exists(fs, tp))
+      TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp), TableLog.legacyFiles(fs, sp))
 
   /** A7: per-ticker stats view (reference __table_stats__,
     * sql_db.py:559-599). Parquet footers already carry min/max; this

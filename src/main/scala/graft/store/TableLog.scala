@@ -10,8 +10,9 @@ import java.nio.charset.StandardCharsets
   * columnar store normally gets from a table format.
   *
   * Protocol (single writer, like the reference's `writer-1`):
-  *   1. the writer stages new parquet files, then moves them into their
-  *      final partition directories (unique names — never overwrites);
+  *   1. the writer creates new parquet files directly in their final
+  *      partition directories ([[InPlaceWrite]]; unique names — never
+  *      overwrites);
   *   2. visibility is granted by ONE exclusively-created, self-validating
   *      manifest file at `_commits/NNNNNNNNNN.commit`; the manifest lists
   *      every data and stats file the commit adds and closes with an
@@ -275,23 +276,6 @@ object TableLog {
       }
     }
 
-  /** Move every file under `stagingDir` into `targetDir`, preserving the
-    * relative (partition) layout; returns the target-root-relative paths.
-    * File names are Spark task outputs (job-UUID unique), so moves never
-    * overwrite. */
-  def promote(fs: FileSystem, stagingDir: Path, targetDir: Path): Seq[String] = {
-    val staged = listFilesRecursively(fs, stagingDir)
-      .filter(p => p.getName.endsWith(".parquet"))
-    staged.map { p =>
-      val rel = relativize(stagingDir, p)
-      val dest = new Path(targetDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(p, dest))
-        throw new java.io.IOException(s"promote failed: $p -> $dest")
-      rel
-    }
-  }
-
   /** Parquet files already present under `dir` (root-relative) — folded
     * into the first commit when migrating a plain-append table. */
   def legacyFiles(fs: FileSystem, dir: Path): Seq[String] =
@@ -324,14 +308,14 @@ object TableLog {
 
   /** Delete files under the table/stats trees that no live commit
     * references, plus manifests older than the last reset and (when
-    * `stageRoot` is given) leftover `stagePrefix*` dirs from crashed
-    * batches. Safe under the single-writer assumption (anything
-    * unreferenced is either pre-reset garbage or a crashed commit, and
-    * no batch is in-flight FOR THIS TABLE while the writer vacuums).
-    * Stage dirs of sibling tables under the same root may legitimately
-    * be in flight — pass the table-scoped `stagePrefix` the writer
-    * stamps ([[StockStore]] uses `stage-<dataType>-`) so the sweep never
-    * deletes another table's live staging. */
+    * `stageRoot` is given) leftover `stagePrefix*` dirs of crashed
+    * batches from writers that staged before writing in place. Safe
+    * under the single-writer assumption (anything unreferenced is either
+    * pre-reset garbage or a crashed write, and no batch is in flight FOR
+    * THIS TABLE while the writer vacuums — [[StockStore]] calls it under
+    * the table's writer lock). Pass the table-scoped `stagePrefix`
+    * ([[StockStore]] uses `stage-<dataType>-`) so the sweep never
+    * deletes a sibling table's stage dir. */
   def vacuum(fs: FileSystem, tablePath: Path, statsPath: Path,
       stageRoot: Option[Path] = None, stagePrefix: String = "stage-"): Long = {
     val (data, stats) = effective(fs, tablePath)

@@ -54,13 +54,13 @@ object StreamIngest {
       .trigger(trigger)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // the store's one write path: its diagnostics ride the merge's
-          // own jobs as observations, so a trigger pays no count action
-          StockStore.upsert(batch.sparkSession, root, Streaming, batch,
-            Exchanges.tz(exchange))
-          ()
-        }
+        // the store's one write path: its diagnostics ride the merge's
+        // own jobs as observations, so a trigger pays no count or
+        // emptiness probe (a batch that keeps no row ends after its
+        // first job)
+        StockStore.upsert(batch.sparkSession, root, Streaming, batch,
+          Exchanges.tz(exchange))
+        ()
       }
       .start()
   }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.AbstractDataType
 /** Access shim for `private[sql]` Spark internals needed to expose custom
   * Catalyst expressions as user-facing Columns (the standard pattern for
   * Spark extension libraries — a bridge object inside the sql package
-  * namespace), plus the `private[spark]` listener-bus drain and schema
-  * nullability. Only pure adapters live here; all graft logic stays in
-  * the `graft.*` packages.
+  * namespace), plus the `private[spark]` listener-bus drain, schema
+  * nullability and a file write through a caller's commit protocol.
+  * Only pure adapters live here; all graft logic stays in the `graft.*`
+  * packages.
   */
 object GraftBridge {
   /** Wrap a Catalyst expression as a Column (Spark 4 classic API). */
@@ -38,6 +39,30 @@ object GraftBridge {
     * file sources give a relation's data schema. */
   def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     s.asNullable
+
+  /** Write `df` as parquet under `path`, partitioned by `partitionCols`,
+    * through `committer` instead of the commit protocol the session conf
+    * names: the file writer a `df.write.parquet` runs, as one SQL
+    * execution, with no catalog refresh. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, path: String, partitionCols: Seq[String],
+      committer: org.apache.spark.internal.io.FileCommitProtocol): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val resolver = session.sessionState.conf.resolver
+      val parts = partitionCols.map(c => plan.output.find(a => resolver(a.name, c))
+        .getOrElse(throw new IllegalArgumentException(s"no partition column $c in ${plan.output}")))
+      FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        session.sessionState.newHadoopConfWithOptions(Map.empty),
+        parts, None, Nil, Map.empty)
+    }
+  }
 
   type AbstractType = AbstractDataType
 }

@@ -323,9 +323,10 @@ class ObjectStoreFsSpec extends AnyFunSuite {
     withStore { (fs, root) =>
       val tp = new Path(s"$root/t")
       val sp = new Path(s"$root/t__stats")
-      // stage then promote (rename = copy+delete on the store)
-      write(fs, new Path(s"$root/stage-x/p=1/f0.parquet"), "d0")
-      val rel = TableLog.promote(fs, new Path(s"$root/stage-x"), tp)
+      // a file written in place, then found by listing as a writer's
+      // first commit folds it in (no rename: the store's writes have none)
+      write(fs, new Path(tp, "p=1/f0.parquet"), "d0")
+      val rel = TableLog.legacyFiles(fs, tp)
       assert(rel == Seq("p=1/f0.parquet"))
       TableLog.publish(fs, tp, rel, Nil, store = ManifestStore.HttpConditionalPut)
       write(fs, new Path(tp, "p=1/f1.parquet"), "d1")

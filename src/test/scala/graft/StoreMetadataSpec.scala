@@ -3,9 +3,9 @@ package graft
 import graft.model.Streaming
 import graft.store.{ObjectStoreFileSystem, StockStore, TableLog}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
-import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,19 +13,36 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.net.URI
 import java.util.concurrent.atomic.AtomicReference
 
-/** Parquet output committer that runs [[HookedCommitter.hook]] once, on
-  * the driver, as the next parquet write job commits. An upsert's stage
-  * writes run after its read-back and before its publish, so the hook
-  * lands another writer's commit inside that window. */
-class HookedCommitter(out: Path, ctx: TaskAttemptContext)
-    extends ParquetOutputCommitter(out, ctx) {
-  override def commitJob(jc: JobContext): Unit = {
-    Option(HookedCommitter.hook.getAndSet(null)).foreach(_.apply())
-    super.commitJob(jc)
+/** The local file system under the `hooked` scheme, whose first file
+  * created under [[HookedLocalFs.table]] runs [[HookedLocalFs.hook]]
+  * first. An upsert creates its data files after its read-back and
+  * before its publish, so the hook lands another writer's commit inside
+  * that window. */
+class HookedLocalFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("hooked:///")
+  override def getScheme: String = "hooked"
+  private def beforeCreate(p: Path): Unit =
+    if (Option(HookedLocalFs.table.get).exists(t => p.toUri.getPath.startsWith(t + "/")))
+      Option(HookedLocalFs.hook.getAndSet(null)).foreach { h =>
+        HookedLocalFs.ranAt.set(p.getName)
+        h.apply()
+      }
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    beforeCreate(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    beforeCreate(p)
+    super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 }
-object HookedCommitter {
+object HookedLocalFs {
+  val table = new AtomicReference[String]()
   val hook = new AtomicReference[() => Unit]()
+  /** Name of the file whose create ran the hook. */
+  val ranAt = new AtomicReference[String]()
 }
 
 /** The store's per-process metadata: the manifest parse cache, the
@@ -106,8 +123,38 @@ class StoreMetadataSpec extends AnyFunSuite {
     assert(evolved.count() == 12 * 4 * 4 + 4)
   }
 
+  test("table() over 600 committed files this process has not seen starts no listing job") {
+    import spark.implicits._
+    val template = SparkTestSession.tempDir("store-listing-template")
+    Seq((new java.sql.Timestamp(1751464800000L), 10.0, 5L, 1))
+      .toDF("timestamp", "price", "volume", "version")
+      .coalesce(1).write.mode("overwrite").parquet(template)
+    val file = new java.io.File(template).listFiles().filter(_.getName.endsWith(".parquet")).head
+    // 60 day partitions of 10 files each, copied in with java.nio (a
+    // Spark write forks permission calls per file) and committed as one
+    // manifest, so no status of theirs is in this process's cache
+    val root = SparkTestSession.tempDir("store-listing-600")
+    val rels = for (t <- 0 until 60; i <- 0 until 10) yield {
+      val rel = f"ticker=L$t%02d/y=2025/m=7/d=2/part-$i%02d.parquet"
+      val dest = java.nio.file.Paths.get(s"$root/streaming/$rel")
+      java.nio.file.Files.createDirectories(dest.getParent)
+      java.nio.file.Files.copy(file.toPath, dest)
+      rel
+    }
+    TableLog.publish(fs(root), new Path(s"$root/streaming"), rels, Nil)
+
+    // the one job left is the footer-schema merge every first read of a
+    // table runs; Spark's parallel listing (one task per file) would be
+    // a second, as it was when the index listed the files itself
+    val (df, jobs) = SparkTestSession.jobsDuring(StockStore.table(spark, root, Streaming))
+    assert(jobs == 1, s"building the table started $jobs Spark job(s)")
+    assert(df.count() == 600)
+    assert(df.select("ticker").distinct().count() == 60)
+  }
+
   test("a column another writer commits inside an upsert stays visible after it") {
-    val root = SparkTestSession.tempDir("store-foreign")
+    spark.sparkContext.hadoopConfiguration.set("fs.hooked.impl", classOf[HookedLocalFs].getName)
+    val root = "hooked://" + SparkTestSession.tempDir("store-foreign")
     val tickers = Seq("AAA", "BBB")
     val t0 = java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli
     StockStore.upsert(spark, root, Streaming, ticks(tickers, t0, 3, 10.0))
@@ -115,7 +162,7 @@ class StoreMetadataSpec extends AnyFunSuite {
     assert(StockStore.table(spark, root, Streaming).count() == 12)
 
     // the other writer's files: a store of its own, moved in by the hook
-    val side = SparkTestSession.tempDir("store-foreign-side")
+    val side = "hooked://" + SparkTestSession.tempDir("store-foreign-side")
     StockStore.upsert(spark, side, Streaming,
       ticks(Seq("CCC"), t0, 2, 30.0).withColumn("venue", lit("Y")))
     val f = fs(root)
@@ -123,18 +170,19 @@ class StoreMetadataSpec extends AnyFunSuite {
     val sideTp = new Path(s"$side/streaming")
     val foreign = TableLog.effective(f, sideTp)._1
     val foreignId = new java.util.concurrent.atomic.AtomicLong(-1L)
-    HookedCommitter.hook.set { () =>
+    HookedLocalFs.hook.set { () =>
       foreign.foreach { rel =>
         f.mkdirs(new Path(tp, rel).getParent)
         assert(f.rename(new Path(sideTp, rel), new Path(tp, rel)))
       }
       foreignId.set(TableLog.publish(f, tp, foreign, Nil))
     }
-    val key = "spark.sql.parquet.output.committer.class"
-    spark.conf.set(key, classOf[HookedCommitter].getName)
+    HookedLocalFs.table.set(tp.toUri.getPath)
     try StockStore.upsert(spark, root, Streaming, ticks(tickers, t0 + 120000L, 3, 12.0))
-    finally { spark.conf.unset(key); HookedCommitter.hook.set(null) }
+    finally { HookedLocalFs.table.set(null); HookedLocalFs.hook.set(null) }
 
+    assert(Option(HookedLocalFs.ranAt.get).exists(_.endsWith(".parquet")),
+      s"the hook must run as the upsert creates a data file, ran at ${HookedLocalFs.ranAt.get}")
     val ids = TableLog.commits(f, tp).map(_.id)
     assert(foreignId.get >= 0 && ids.last > foreignId.get,
       s"the other writer's commit ${foreignId.get} must land before the upsert's (ids $ids)")
@@ -152,8 +200,7 @@ class StoreMetadataSpec extends AnyFunSuite {
       val os = fs(osRoot)
       val tp = new Path(s"$osRoot/streaming")
       val t0 = java.time.Instant.parse("2025-07-02T14:00:00Z").toEpochMilli
-      // Each generation is written on the local FS and uploaded whole: the
-      // Spark stage write renames directories, which this binding lacks.
+      // Each generation is written on the local FS and uploaded whole.
       def generation(df: DataFrame): Seq[Long] = {
         val local = SparkTestSession.tempDir("store-os-gen")
         StockStore.upsert(spark, local, Streaming, df)

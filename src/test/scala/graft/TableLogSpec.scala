@@ -1,7 +1,8 @@
 package graft
 
 import graft.model.{HistoricalInterday, Streaming}
-import graft.store.{StockStore, TableLog}
+import graft.read.ReadApi
+import graft.store.{InPlaceWrite, StockStore, TableLog}
 import graft.transform.EodhdTransform
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -29,7 +30,7 @@ class TableLogSpec extends AnyFunSuite {
     StockStore.upsert(spark, root, Streaming, tickDf(100.0))
     val before = StockStore.table(spark, root, Streaming).collect().toSet
 
-    // crash simulation: a data file promoted into a partition dir but
+    // crash simulation: a data file written into a partition dir but
     // never referenced by a manifest (copy an existing committed file)
     val f = fs(root)
     val tp = new Path(s"$root/streaming")
@@ -376,6 +377,42 @@ class TableLogSpec extends AnyFunSuite {
     val after = StockStore.commitIds(spark, root, Streaming)
     assert(after.size == 1)
     assert(prices(StockStore.tableAt(spark, root, Streaming, after.head)) == all)
+  }
+
+  test("an orphan file in a partition directory is invisible to every manifest read, and vacuum deletes it") {
+    val root = SparkTestSession.tempDir("tlog-inplace-orphan")
+    StockStore.upsert(spark, root, Streaming, tickDf(100.0))
+    StockStore.upsert(spark, root, Streaming, tickDf(200.0))
+    val f = fs(root)
+    val tp = new Path(s"$root/streaming")
+    val sp = new Path(s"$root/streaming__stats")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("ticker", "timestamp", "price", "volume", "version").collect().map(_.toString).toSet
+    val req = ReadApi.ReadRequest(Streaming, "SPY", None, "2025-09-11 00:00", "2025-09-11 23:59")
+    val lastId = StockStore.commitIds(spark, root, Streaming).last
+    val before = rows(StockStore.table(spark, root, Streaming))
+    val viaApi = rows(ReadApi.read(spark, root, req))
+    val stats = StockStore.incrementalStats(spark, root, Streaming).collect().toSet
+    assert(before.size == 6 && viaApi == before)
+
+    // a write that died before its publish: data files in the table's
+    // own partition directories and a stats-log file, on no manifest line
+    val orphanData = InPlaceWrite.parquet(StockStore.table(spark, root, Streaming)
+      .withColumn("price", col("price") + 1000.0), tp, Seq("ticker", "y", "m", "d"))
+    val orphanStats = InPlaceWrite.parquet(
+      StockStore.incrementalStats(spark, root, Streaming).coalesce(1), sp, Nil)
+    val orphans = orphanData.map(new Path(tp, _)) ++ orphanStats.map(new Path(sp, _))
+    assert(orphanData.nonEmpty && orphanData.forall(_.startsWith("ticker=SPY/y=2025/m=9/d=11/")))
+    assert(orphans.forall(f.exists), s"$orphans")
+
+    assert(rows(StockStore.table(spark, root, Streaming)) == before)
+    assert(rows(StockStore.tableAt(spark, root, Streaming, lastId)) == before)
+    assert(rows(ReadApi.read(spark, root, req)) == viaApi)
+    assert(StockStore.incrementalStats(spark, root, Streaming).collect().toSet == stats)
+
+    assert(TableLog.vacuum(f, tp, sp) == orphans.size)
+    assert(!orphans.exists(f.exists), "vacuum deletes every orphan")
+    assert(rows(StockStore.table(spark, root, Streaming)) == before)
   }
 
   test("legacy plain-append tables fold into the first commit") {
