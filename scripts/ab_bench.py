@@ -25,8 +25,11 @@ head/base ratios, how many of all the pairs run head won (by the metric's
 not count, go to neither side), the interquartile range of the base runs,
 and `gain`: head won at least nine tenths of the pairs, its median is
 better than the base median by more than that range, and head has no more
-runs that do not count than base. The runs themselves are written as JSON
-to `--out` when it is given.
+runs that do not count than base. Each run's `attempted` op count is
+printed with it and listed per side before the table, so runs that held
+a different number of rounds (one drain or two in a `tick_drain` window)
+show. The runs themselves are written as JSON to `--out` when it is
+given.
 """
 import argparse
 import json
@@ -149,7 +152,8 @@ def main():
                 r["seed"] = seed
                 runs[side].append(r)
                 print(f"pair {i + 1}/{a.pairs} seed {seed} {side}: "
-                      f"{'ok' if r['ok'] else 'FAILED'}", file=sys.stderr, flush=True)
+                      f"{'ok' if r['ok'] else 'FAILED'}, attempted {r.get('attempted', '-')}",
+                      file=sys.stderr, flush=True)
 
         with open(os.path.join(sides["head"][0], "BENCHMARK.json")) as fh:
             bench = json.load(fh)
@@ -160,6 +164,9 @@ def main():
         print(f"workload {a.workload}, {a.pairs} pairs of {seconds} s runs, seeds "
               f"{[seeds[i % len(seeds)] for i in range(a.pairs)]}, runs not "
               f"correct or with failed ops: base {bad['base']}, head {bad['head']}")
+        for side, rs in runs.items():
+            print(f"attempted per {side} run: "
+                  + " ".join(str(r.get("attempted", "-")) for r in rs))
         report(names, better, runs)
         if a.out:
             with open(a.out, "w") as fh:

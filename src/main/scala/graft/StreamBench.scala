@@ -5,6 +5,7 @@ import graft.store.StockStore
 import graft.model.{Exchanges, Streaming}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.Files
@@ -303,7 +304,9 @@ object StreamBench {
     @volatile var lastCommitMs = 0L
 
     def sinkBatch(batch: DataFrame, store: DataFrame => Unit): Unit = {
-      val b = batch.cache()
+      // the sink's jobs run in this session, not the query's clone
+      // ([[GraftBridge.inSession]])
+      val b = GraftBridge.inSession(spark, batch).cache()
       try {
         // one tiny agg on the cached batch: oldest frame + row count —
         // doubles as the emptiness probe, so each trigger pays exactly
@@ -334,7 +337,7 @@ object StreamBench {
       val stream = mode match {
         case "upsert" => ticks.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            sinkBatch(batch, b => StockStore.upsert(b.sparkSession, root, Streaming, b,
+            sinkBatch(batch, b => StockStore.upsert(spark, root, Streaming, b,
               Exchanges.tz("US")))
           }
         case "stateful" =>

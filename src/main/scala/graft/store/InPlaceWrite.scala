@@ -15,14 +15,16 @@ import org.apache.spark.sql.graftbridge.GraftBridge
   * object store a rename is a copy. A file becomes visible only when the
   * caller publishes the returned paths; until then, and for good after a
   * failed or crashed write, it is an orphan that every manifest read
-  * skips and [[TableLog.vacuum]] reclaims. */
+  * skips and [[TableLog.vacuum]] reclaims. Local files are created
+  * through [[LocalStoreFs]], bound in the write's own Hadoop conf. */
 object InPlaceWrite {
 
   /** Write `df` under `base`, partitioned by `partCols`, and return the
     * written files relative to `base`, unpublished. */
   def parquet(df: DataFrame, base: Path, partCols: Seq[String]): Seq[String] = {
     val protocol = new InPlaceCommitProtocol(java.util.UUID.randomUUID().toString, base.toString)
-    GraftBridge.writeParquet(df, base.toString, partCols, protocol)
+    GraftBridge.writeParquet(df, base.toString, partCols, protocol,
+      LocalStoreFs.writeOptions(base, df.sparkSession.sparkContext.hadoopConfiguration))
     protocol.committed
   }
 }

@@ -39,6 +39,12 @@ object StockStore {
 
   private def tablePath(root: String, dt: StockDataType) = s"$root/${dt.name}"
 
+  /** The file system the store reads and commits `p` through: on the
+    * local FS, [[LocalStoreFs]], which creates manifests, markers and
+    * directories without forking `chmod`. */
+  private def storeFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+    LocalStoreFs.forPath(p, spark.sparkContext.hadoopConfiguration)
+
   // Same-JVM single-writer guard per (root, dataType): the merge is a
   // read-merge-write — A3 dedup and A4 versioning decide against a read
   // of `existing` taken before the write — so two concurrent upserts to
@@ -79,7 +85,7 @@ object StockStore {
       schema: org.apache.spark.sql.types.StructType)
       : (DataFrame, Option[TableLog.Commit.Stamp]) = {
     val p = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, p)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     if (!fs.exists(p)) (empty, None)
@@ -253,8 +259,7 @@ object StockStore {
     // history is possible) also degrades to ticker-only; the marker is
     // stamped at this batch's publish, so steady-state streaming pays
     // the full tuple prune from batch 2 on.
-    val markerFs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val markerFs = storeFs(spark, new org.apache.hadoop.fs.Path(root))
     val tzConsistent = readTzMarker(markerFs, tzMarkerPath(root, dt)) match {
       case Some(tz) => tz == exchangeTz
       case None => !markerFs.exists(new org.apache.hadoop.fs.Path(tablePath(root, dt)))
@@ -378,8 +383,7 @@ object StockStore {
     // re-aggregate losslessly) and never scan the data, however large
     // the table grows.
     if (written > 0) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = storeFs(spark, new org.apache.hadoop.fs.Path(root))
       val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
       val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
       ensureLog(fs, tp, sp)
@@ -482,7 +486,7 @@ object StockStore {
     * pruning — identical to a plain directory read. */
   def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, tp)
     committedState(fs, tp) match {
       case Some(st @ (_, files)) if files.nonEmpty => tableFromState(spark, tp, st)
       case _ =>
@@ -528,7 +532,7 @@ object StockStore {
     val opts = Map("basePath" -> key)
     val memo = Option(tableSchemaCache.get(key)).collect { case (`stamp`, s) => s }
     val paths = files.map(new org.apache.hadoop.fs.Path(_))
-    cacheStatuses(tp.getFileSystem(spark.sparkContext.hadoopConfiguration), paths,
+    cacheStatuses(storeFs(spark, tp), paths,
       fileStatuses(spark))
     val index = new InMemoryFileIndex(spark, paths, opts, memo, fileStatuses(spark))
     // spark.read fails on a path that does not exist; the index alone
@@ -613,7 +617,7 @@ object StockStore {
   def tableAt(spark: SparkSession, root: String, dt: StockDataType,
       commitId: Long): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, tp)
     val all = TableLog.commits(fs, tp)
     require(all.nonEmpty, s"${dt.name} has no commit log (legacy table) — no history to travel")
     require(all.exists(_.id == commitId),
@@ -631,7 +635,7 @@ object StockStore {
     * snapshot handles for [[tableAt]]. */
   def commitIds(spark: SparkSession, root: String, dt: StockDataType): Seq[Long] = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, tp)
     TableLog.commits(fs, tp).map(_.id)
   }
 
@@ -662,7 +666,7 @@ object StockStore {
 
   private def compactLocked(spark: SparkSession, root: String, dt: StockDataType): Long = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, new Path(root))
     val tp = new Path(tablePath(root, dt))
     val sp = new Path(statsLogPath(root, dt))
     ensureLog(fs, tp, sp)
@@ -757,7 +761,7 @@ object StockStore {
     val keys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = storeFs(spark, tp)
     val log =
       if (TableLog.exists(fs, tp)) {
         val files = TableLog.effective(fs, tp)._2

@@ -117,23 +117,20 @@ object TableLog {
     * served the old table's file lists. Only Some results are cached: a
     * torn manifest may be a concurrent writer mid-create whose `end`
     * sentinel lands later (exclusive-create seam), so None must be
-    * re-read. Vacuumed manifests simply stop being listed; the cap-clear
-    * bounds memory for very long-lived processes. */
-  private val parseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Commit]()
+    * re-read. Vacuumed manifests simply stop being listed, and the
+    * least recently used entries make way past 65,536, so a long-lived
+    * process stays bounded without dropping the manifests its live
+    * tables read on every trigger. */
+  private val parseCache = new LruCache[String, Commit](65536)
   private def parse(fs: FileSystem, st: FileStatus, table: String): Option[Commit] = {
     val key = fs.makeQualified(st.getPath).toString
-    val hit = parseCache.get(key)
-    if (hit != null && hit.table == table && hit.len == st.getLen &&
-        hit.mtime == st.getModificationTime) Some(hit)
-    else {
-      val r = parseUncached(fs, st, table)
-      r.foreach { c =>
-        if (parseCache.size > 65536) parseCache.clear()
-        parseCache.put(key, c)
+    parseCache.get(key).filter(hit => hit.table == table && hit.len == st.getLen &&
+        hit.mtime == st.getModificationTime)
+      .orElse {
+        val r = parseUncached(fs, st, table)
+        r.foreach(parseCache.put(key, _))
+        r
       }
-      r
-    }
   }
 
   private def readAll(fs: FileSystem, p: Path): Array[Byte] = {
@@ -353,4 +350,14 @@ object TableLog {
       .foreach { p => if (fs.delete(p, false)) removed += 1 }
     removed
   }
+}
+
+/** A map of at most `capacity` entries that evicts the least recently
+  * read or written one; every access is synchronized. */
+private[store] final class LruCache[K, V](capacity: Int) {
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > capacity
+  }
+  def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+  def put(k: K, v: V): Unit = synchronized { m.put(k, v); () }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.model._
 import graft.store.StockStore
 import graft.transform.EodhdTransform
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -57,8 +58,10 @@ object StreamIngest {
         // the store's one write path: its diagnostics ride the merge's
         // own jobs as observations, so a trigger pays no count or
         // emptiness probe (a batch that keeps no row ends after its
-        // first job)
-        StockStore.upsert(batch.sparkSession, root, Streaming, batch,
+        // first job). It runs in the caller's session, not the query's
+        // clone, so a new query's first trigger reuses the classes
+        // earlier queries compiled ([[GraftBridge.inSession]]).
+        StockStore.upsert(spark, root, Streaming, GraftBridge.inSession(spark, batch),
           Exchanges.tz(exchange))
         ()
       }
@@ -215,8 +218,11 @@ object StreamIngest {
       perDocScores: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, id: Long) =>
+      (clonedBatch: DataFrame, id: Long) =>
         import org.apache.spark.sql.functions._
+        // scored in the session that defined the stream, beside the
+        // frozen model's frames ([[GraftBridge.inSession]])
+        val batch = GraftBridge.inSession(docs.sparkSession, clonedBatch)
         // ONE-pass routing frame: the scorer itself keeps unscorable
         // docs (null score → fail closed) and keys by distinct doc_id,
         // so a trigger pays a single scored-gram aggregation plus the

@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.AbstractDataType
   * Catalyst expressions as user-facing Columns (the standard pattern for
   * Spark extension libraries — a bridge object inside the sql package
   * namespace), plus the `private[spark]` listener-bus drain, schema
-  * nullability and a file write through a caller's commit protocol.
+  * nullability, a file write through a caller's commit protocol and the
+  * rebinding of a DataFrame to another session.
   * Only pure adapters live here; all graft logic stays in the `graft.*`
   * packages.
   */
@@ -43,9 +44,11 @@ object GraftBridge {
   /** Write `df` as parquet under `path`, partitioned by `partitionCols`,
     * through `committer` instead of the commit protocol the session conf
     * names: the file writer a `df.write.parquet` runs, as one SQL
-    * execution, with no catalog refresh. */
+    * execution, with no catalog refresh. `hadoopOptions` go into this
+    * write's Hadoop conf only, the one its tasks receive. */
   def writeParquet(df: org.apache.spark.sql.DataFrame, path: String, partitionCols: Seq[String],
-      committer: org.apache.spark.internal.io.FileCommitProtocol): Unit = {
+      committer: org.apache.spark.internal.io.FileCommitProtocol,
+      hadoopOptions: Map[String, String]): Unit = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.FileFormatWriter
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -59,10 +62,24 @@ object GraftBridge {
         .getOrElse(throw new IllegalArgumentException(s"no partition column $c in ${plan.output}")))
       FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
-        session.sessionState.newHadoopConfWithOptions(Map.empty),
+        session.sessionState.newHadoopConfWithOptions(hadoopOptions),
         parts, None, Nil, Map.empty)
     }
   }
+
+  /** `df` as a DataFrame of `spark`: its logical plan, analyzed and run
+    * in that session. A streaming query hands `foreachBatch` its batch in
+    * the query's own clone of the session, whose jobs' tasks get a class
+    * loader of their own, and Spark's codegen cache is keyed by loader:
+    * rebound to the session that started the query, a sink's jobs reuse
+    * the classes earlier queries compiled. The batch's plan is the
+    * `LogicalRDD` over the micro-batch's rows that Spark's sink already
+    * built, so nothing is copied or converted. */
+  def inSession(spark: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.logical)
 
   type AbstractType = AbstractDataType
 }

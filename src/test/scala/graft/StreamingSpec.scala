@@ -437,4 +437,33 @@ class StreamingSpec extends AnyFunSuite {
         s"per-batch stream probe must equal the batch run: $got vs $expected")
     } finally { q.stop(); idxCached.unpersist(false) }
   }
+
+  test("a second stream's first trigger reuses the classes the first stream compiled") {
+    // Each query runs foreachBatch in its own clone of the session; the
+    // sink rebinds the batch to the caller's session, whose tasks keep
+    // one class loader, so the second drain finds the upsert's generated
+    // classes in Spark's codegen cache (about 50 are compiled again
+    // when the sink runs in the clone).
+    val wal = java.nio.file.Paths.get(SparkTestSession.tempDir("cg-wal"))
+    val t0 = 1751463000000L
+    val frames = (0 until 200).map(i =>
+      s"""{"s":"T${i % 5}","p":${100 + i % 7}.5,"v":${1 + i},"t":${t0 + i * 1000L}}""")
+    java.nio.file.Files.write(wal.resolve(f"${0}%012d.seg"),
+      frames.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def drain(): (Long, Long) = {
+      val root = SparkTestSession.tempDir("cg-store")
+      val src = spark.readStream.format("graft.sources.ws.WsSourceProvider")
+        .option("walDir", wal.toString).load()
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      val q = StreamIngest.start(spark, src, "trades", root, SparkTestSession.tempDir("cg-ckpt"),
+        trigger = Trigger.ProcessingTime(0L))
+      try q.processAllAvailable() finally q.stop()
+      (compiles.getCount - before, StockStore.table(spark, root, Streaming).count())
+    }
+    val (first, rows1) = drain()
+    val (second, rows2) = drain()
+    assert(rows1 == 200 && rows2 == 200)
+    assert(second <= 4, s"second drain compiled $second classes (first: $first)")
+  }
 }
