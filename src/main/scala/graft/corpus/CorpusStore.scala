@@ -1,6 +1,6 @@
 package graft.corpus
 
-import graft.store.{InPlaceWrite, TableLog}
+import graft.store.{InPlaceWrite, ManifestTable, TableLog}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * lands. Snapshots write partitioned by (split, lang) — the two
   * predicates every training read filters on, so Catalyst prunes a
   * train-English read to exactly its directories — and become visible
-  * atomically through the SAME [[graft.store.TableLog]] manifest
-  * protocol as the tick store: files written in place → ONE publish. A crash
+  * atomically through the SAME manifest layer as the tick store
+  * ([[graft.store.ManifestTable]] over [[graft.store.TableLog]]): files
+  * written in place → ONE publish, read back through one relation. A crash
   * mid-write leaves files unreferenced (invisible, vacuumable), never a
   * half-visible corpus; every snapshot's commit id is a pinnable,
   * reproducible training input ([[snapshotAt]]), so "which data did run
@@ -37,10 +38,9 @@ object CorpusStore {
   def writeSnapshot(docs: DataFrame, root: String): Long = {
     val spark = docs.sparkSession
     val tp = new Path(tablePath(root))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = ManifestTable.fs(spark, tp)
     val rows = if (docs.columns.contains("split")) docs else withSplit(docs)
-    if (!TableLog.exists(fs, tp))
-      TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp), Nil)
+    ManifestTable.ensureLog(fs, tp, None)
     val rel = InPlaceWrite.parquet(
       rows.repartition(col("split"), col("lang")), // one file per partition dir
       tp, Seq("split", "lang"))
@@ -53,11 +53,10 @@ object CorpusStore {
     * filters prune directories). */
   def read(spark: SparkSession, root: String): DataFrame = {
     val tp = new Path(tablePath(root))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (files, _) = TableLog.effective(fs, tp)
-    require(files.nonEmpty, s"no committed corpus under $tp")
-    spark.read.option("basePath", tp.toString)
-      .parquet(files.map(f => new Path(tp, f).toString): _*)
+    val fs = ManifestTable.fs(spark, tp)
+    val live = ManifestTable.latest(fs, tp).filter(_.data.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(s"no committed corpus under $tp"))
+    ManifestTable.relation(spark, fs, tp, live.data, live)
   }
 
   /** Doc-level changelog between two pinned snapshots: one row per
@@ -76,12 +75,8 @@ object CorpusStore {
   /** The corpus exactly as of `commitId` — the reproducible-training pin. */
   def snapshotAt(spark: SparkSession, root: String, commitId: Long): DataFrame = {
     val tp = new Path(tablePath(root))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = TableLog.commits(fs, tp)
-    require(all.exists(_.id == commitId), s"unknown commit $commitId under $tp")
-    val (files, _) = TableLog.effectiveAt(all, commitId)
-    require(files.nonEmpty, s"commit $commitId references no files")
-    spark.read.option("basePath", tp.toString)
-      .parquet(files.map(f => new Path(tp, f).toString): _*)
+    val fs = ManifestTable.fs(spark, tp)
+    val s = ManifestTable.at(fs, tp, commitId)
+    ManifestTable.relation(spark, fs, tp, s.data, s)
   }
 }

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.model._
-import graft.store.StockStore
+import graft.store.{ManifestTable, StockStore}
 import graft.transform.EodhdTransform
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -105,8 +105,7 @@ object Commands {
     } finally q.stop()
     // Hadoop FS probe (not java.io.File) so HDFS/S3 roots work too.
     val p = new org.apache.hadoop.fs.Path(s"$root/${Streaming.name}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
+    if (!ManifestTable.fs(spark, p).exists(p)) 0L
     else StockStore.table(spark, root, Streaming).count()
   }
 }

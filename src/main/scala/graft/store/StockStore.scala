@@ -24,10 +24,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Layout: `root/<data_type>/ticker=…/y=…/m=…[/d=…]` — partition values
   * are the event time on the exchange-local calendar
   * (reference: src/stockops/data/utils.py:47-76). At 100 TB the layout
-  * gives partition pruning on (ticker, calendar range); row-group stats
-  * prune within a month/day; the merge join keys are the natural shuffle
-  * keys and the left-semi probe keeps the existing-side scan proportional
-  * to the batch's key range, not the store size.
+  * gives partition pruning on (ticker, calendar range), and the merge
+  * reads back only the partitions and event-time window the batch
+  * touches, so its existing-side scan follows the batch, not the store
+  * size. Committed files are read and published through
+  * [[ManifestTable]], the layer [[graft.corpus.CorpusStore]] shares.
   */
 object StockStore {
 
@@ -38,12 +39,6 @@ object StockStore {
       nullSkipped: Long, versionConflicts: Long)
 
   private def tablePath(root: String, dt: StockDataType) = s"$root/${dt.name}"
-
-  /** The file system the store reads and commits `p` through: on the
-    * local FS, [[LocalStoreFs]], which creates manifests, markers and
-    * directories without forking `chmod`. */
-  private def storeFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    LocalStoreFs.forPath(p, spark.sparkContext.hadoopConfiguration)
 
   // Same-JVM single-writer guard per (root, dataType): the merge is a
   // read-merge-write — A3 dedup and A4 versioning decide against a read
@@ -75,26 +70,25 @@ object StockStore {
   /** Read the stored table, or an empty frame with `schema` if absent,
     * plus the stamp of the commit it read (None for an absent, empty or
     * legacy table) — the upsert carries the schema memo forward from it
-    * after publishing ([[carrySchemaMemo]]). The existence probe goes
-    * through Hadoop FileSystem so the store works on HDFS/S3 paths too —
-    * a java.io.File probe would silently report "absent" there and make
-    * [[upsert]] treat a populated table as empty. The union schema
+    * after publishing ([[ManifestTable.carrySchemaMemo]]). The existence
+    * probe goes through Hadoop FileSystem so the store works on HDFS/S3
+    * paths too — a java.io.File probe would silently report "absent"
+    * there and make [[upsert]] treat a populated table as empty. The union schema
     * (A10) reads rows written before a dynamic column arrived with that
     * column null. */
   private def readBack(spark: SparkSession, root: String, dt: StockDataType,
       schema: org.apache.spark.sql.types.StructType)
       : (DataFrame, Option[TableLog.Commit.Stamp]) = {
     val p = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = storeFs(spark, p)
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (!fs.exists(p)) (empty, None)
-    else committedState(fs, p) match {
-      case Some((_, Nil)) => (empty, None) // commit log exists but nothing committed yet
-      // reuse the state just read instead of a second commits() pass —
+    val fs = ManifestTable.fs(spark, p)
+    ManifestTable.latest(fs, p) match {
+      // reuse the snapshot just read instead of a second commits() pass —
       // the streaming sink calls this every micro-batch
-      case Some(st) => (tableFromState(spark, p, st), Some(st._1))
-      case None => (table(spark, root, dt), None)
+      case Some(s) if s.data.nonEmpty =>
+        (ManifestTable.relation(spark, fs, p, s.data, s), Some(s.stamp))
+      case None if fs.exists(p) => (table(spark, root, dt), None) // legacy layout
+      case _ => // absent, or a commit log with nothing committed yet
+        (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), None)
     }
   }
 
@@ -235,14 +229,9 @@ object StockStore {
     // at [[MaxPrunedPartitions]] inside the aggregate (task buffers and
     // the driver-bound result stay bounded at any batch size); a batch
     // past the cap (a full-history backfill) scans every partition.
-    // The prune bounds the rows the merge SCANS by the batch; building
-    // the relation is metadata work over every committed file, which a
-    // plain `spark.read` would make store-sized per trigger (a listing
-    // job over all files above 32 of them, and a footer-reading schema
-    // job after every commit). [[tableFromState]] stats only files this
-    // process has not seen, and [[carrySchemaMemo]] keeps the schema
-    // across commits that add no column, so that cost follows the files
-    // each trigger writes.
+    // The prune bounds the rows the merge SCANS by the batch; the
+    // metadata work of building the relation over every committed file
+    // ([[ManifestTable.relation]]) follows the files each trigger writes.
     //
     // The calendar-tuple prune is only sound when every upsert to this
     // store stamped partitions with the SAME tz: a row near local
@@ -259,10 +248,10 @@ object StockStore {
     // history is possible) also degrades to ticker-only; the marker is
     // stamped at this batch's publish, so steady-state streaming pays
     // the full tuple prune from batch 2 on.
-    val markerFs = storeFs(spark, new org.apache.hadoop.fs.Path(root))
-    val tzConsistent = readTzMarker(markerFs, tzMarkerPath(root, dt)) match {
+    val fs = ManifestTable.fs(spark, new org.apache.hadoop.fs.Path(root))
+    val tzConsistent = readTzMarker(fs, tzMarkerPath(root, dt)) match {
       case Some(tz) => tz == exchangeTz
-      case None => !markerFs.exists(new org.apache.hadoop.fs.Path(tablePath(root, dt)))
+      case None => !fs.exists(new org.apache.hadoop.fs.Path(tablePath(root, dt)))
     }
     val pruneCols = if (tzConsistent) partCols else Seq("ticker")
     // job labels (guide §1.5): the merge's waves are attributable in the
@@ -317,10 +306,11 @@ object StockStore {
     // spike by batch 8 of one run — scale/REPORT_r10.md bisection).
     // The event-time column is part of the index key, so any existing
     // row that can match a batch key carries one of the batch's own ts
-    // values — all inside the batch's [min, max] ts window — and the
-    // window predicate is pushed to parquet, skipping every earlier
-    // file by row-group stats. Batch rows always have non-null index
-    // cols here (keepCond), so min/max are total over the batch and
+    // values — all inside the batch's [min, max] ts window. The store
+    // writes `ts` as INT96, whose footers carry no min/max, so the window
+    // skips no file or row group: it filters decoded rows before the
+    // exchange. Batch rows always have non-null index cols here
+    // (keepCond), so min/max are total over the batch and
     // the prune can never hide a matching row. Skipped when the
     // partition prune itself degraded (a bulk backfill past the cap):
     // such a batch spans the table's whole history, and the
@@ -383,10 +373,9 @@ object StockStore {
     // re-aggregate losslessly) and never scan the data, however large
     // the table grows.
     if (written > 0) {
-      val fs = storeFs(spark, new org.apache.hadoop.fs.Path(root))
       val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
       val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
-      ensureLog(fs, tp, sp)
+      ManifestTable.ensureLog(fs, tp, Some(sp))
       // Pin the table's partitioning tz on first publish; later upserts
       // with a different tz fall back to ticker-only read-back pruning.
       writeTzMarkerIfAbsent(fs, tzMarkerPath(root, dt), exchangeTz)
@@ -397,12 +386,8 @@ object StockStore {
       // write, from a thread of its own that inherits this thread's job
       // properties (the trigger's batch id, tags); the publish waits for
       // both, and a failure of either fails the upsert.
-      val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
       val statsWrite = new java.util.concurrent.FutureTask[Seq[String]](() => labeled("stats rows") {
-        InPlaceWrite.parquet((if (smallBatch) out.coalesce(1) else out)
-          .groupBy(statsKeys.map(col): _*)
-          .agg(count(lit(1)).as("row_count"),
-            min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
+        InPlaceWrite.parquet(statsRows(if (smallBatch) out.coalesce(1) else out, dt, statsKeys(dt))
           .coalesce(1), sp, Nil)
       })
       new Thread(statsWrite, s"upsert-stats-${dt.name}").start()
@@ -428,7 +413,7 @@ object StockStore {
       // commit listing stays O(1) however long the stream runs.
       val squash = TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery)
       if (squash >= 0) TableLog.vacuum(fs, tp, sp)
-      readStamp.foreach(carrySchemaMemo(fs, tp, _,
+      readStamp.foreach(ManifestTable.carrySchemaMemo(fs, tp, _,
         if (squash >= 0) Seq(published, squash) else Seq(published),
         out.schema, partCols))
     }
@@ -479,176 +464,44 @@ object StockStore {
 
   /** Read the stored table (post-merge). Manifest-aware: only files a
     * committed manifest references are visible (a crashed half-written
-    * batch is not); tables without a commit log (legacy layout) read the
-    * directory. The schema is the union of every file's (A10): old rows
-    * carry null in a dynamically-added column. `basePath` keeps
-    * partition-column inference — and therefore Catalyst partition
-    * pruning — identical to a plain directory read. */
+    * batch is not), read through [[ManifestTable.relation]]; tables
+    * without a commit log (legacy layout) read the directory, with the
+    * same union schema (A10). */
   def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = storeFs(spark, tp)
-    committedState(fs, tp) match {
-      case Some(st @ (_, files)) if files.nonEmpty => tableFromState(spark, tp, st)
+    val fs = ManifestTable.fs(spark, tp)
+    ManifestTable.latest(fs, tp) match {
+      case Some(s) if s.data.nonEmpty => ManifestTable.relation(spark, fs, tp, s.data, s)
       case _ =>
         spark.read.option("mergeSchema", "true").parquet(tablePath(root, dt))
     }
   }
 
-  // Union-schema memo per table, valid for one commit stamp: inferring it
-  // reads every file's footer (a Spark job). The union only changes when
-  // a commit adds a column, so one inference serves every read of a
-  // commit, and [[carrySchemaMemo]] moves it across this process's own
-  // commits that add none. The stamp (log token, id, manifest length and
-  // mtime) rather than the id keeps a table recreated at the same path
-  // from reading the old table's schema.
-  private val tableSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (TableLog.Commit.Stamp, org.apache.spark.sql.types.StructType)]()
-
-  // One FileStatusCache client for every table. Committed files are
-  // immutable and carry job-unique absolute paths, so a status seen once
-  // stays right for as long as a manifest references the path; reads
-  // then list only the partition directories of files this process has
-  // not seen ([[cacheStatuses]]). The entries live in Spark's shared,
-  // size-bounded cache.
-  private var fileStatusCache: org.apache.spark.sql.execution.datasources.FileStatusCache = _
-  private def fileStatuses(spark: SparkSession) = synchronized {
-    if (fileStatusCache == null) fileStatusCache =
-      org.apache.spark.sql.execution.datasources.FileStatusCache.getOrCreate(spark)
-    fileStatusCache
-  }
-
-  /** The relation over exactly the committed files, built the way
-    * `spark.read.parquet(files)` builds it — an [[org.apache.spark.sql
-    * .execution.datasources.InMemoryFileIndex]] under a
-    * `HadoopFsRelation` — but with the shared status cache and the
-    * memoized schema, so it neither globs nor lists what it has seen,
-    * and starts no listing job for what it has not. */
-  private def tableFromState(spark: SparkSession, tp: org.apache.hadoop.fs.Path,
-      state: (TableLog.Commit.Stamp, Seq[String])): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val (stamp, files) = state
-    val key = tp.toString
-    val opts = Map("basePath" -> key)
-    val memo = Option(tableSchemaCache.get(key)).collect { case (`stamp`, s) => s }
-    val paths = files.map(new org.apache.hadoop.fs.Path(_))
-    cacheStatuses(storeFs(spark, tp), paths,
-      fileStatuses(spark))
-    val index = new InMemoryFileIndex(spark, paths, opts, memo, fileStatuses(spark))
-    // spark.read fails on a path that does not exist; the index alone
-    // would skip a missing root path without a word
-    val leaves = index.allFiles()
-    if (leaves.length != files.distinct.length) {
-      val found = leaves.map(_.getPath.toUri.getPath).toSet
-      val missing = files.filterNot(f => found(new org.apache.hadoop.fs.Path(f).toUri.getPath))
-      throw new java.io.FileNotFoundException(
-        s"committed files missing under $tp: ${missing.take(5).mkString(", ")}")
-    }
-    val partSchema = index.partitionSchema
-    val dataSchema = memo match {
-      case Some(s) => org.apache.spark.sql.types.StructType(
-        s.filterNot(f => partSchema.exists(_.name.equalsIgnoreCase(f.name))))
-      case None => new ParquetFileFormat()
-        .inferSchema(spark, Map("mergeSchema" -> "true"), leaves).get
-    }
-    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
-      GraftBridge.asNullable(dataSchema), None, new ParquetFileFormat, opts)(spark))
-    if (memo.isEmpty) tableSchemaCache.put(key, (stamp, df.schema))
-    df
-  }
-
-  /** Put the status of every committed file `cache` lacks, from one
-    * `listStatus` per partition directory that holds any. Left to the
-    * index, more than 32 unseen files start Spark's parallel listing job,
-    * one task per file (8.4 s at 600 files on a 4-core host). Only the
-    * committed paths go in: an orphan beside them stays unlisted, and a
-    * committed file that is missing stays out, so the index looks for it
-    * and the read fails as before. */
-  private def cacheStatuses(fs: org.apache.hadoop.fs.FileSystem,
-      files: Seq[org.apache.hadoop.fs.Path],
-      cache: org.apache.spark.sql.execution.datasources.FileStatusCache): Unit =
-    files.filter(cache.getLeafFiles(_).isEmpty).groupBy(_.getParent).foreach { case (dir, ps) =>
-      val wanted = ps.map(p => p.toUri.getPath -> p).toMap
-      val listed = try fs.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
-      listed.foreach { st =>
-        wanted.get(st.getPath.toUri.getPath).foreach(p => cache.putLeafFiles(p,
-          Array(new org.apache.hadoop.fs.FileStatus(st.getLen, false, st.getReplication,
-            st.getBlockSize, st.getModificationTime, st.getPath))))
-      }
-    }
-
-  /** After an upsert publishes, move the schema memo from the commit its
-    * read-back saw (`before`) to the upsert's own last commit — only when
-    * the log moved from `before` by this upsert alone, and every data
-    * column the batch wrote is already in the memo with the same type.
-    * `own` are the ids this upsert published (its commit, then the squash
-    * if one fired); they must follow `before.id` with no gap. Ids are
-    * max+1 over manifest names, so a gap means another writer (another
-    * process, or a direct [[TableLog.publish]]) committed in between,
-    * maybe a new column, and the memo stays behind. So does it
-    * when the batch brings a new column (A10) or a new type; the next
-    * read then infers the schema again. */
-  private def carrySchemaMemo(fs: org.apache.hadoop.fs.FileSystem,
-      tp: org.apache.hadoop.fs.Path, before: TableLog.Commit.Stamp, own: Seq[Long],
-      written: org.apache.spark.sql.types.StructType, partCols: Seq[String]): Unit = {
-    val key = tp.toString
-    val alone = own.zipWithIndex.forall { case (id, i) => id == before.id + 1 + i }
-    Option(tableSchemaCache.get(key)).collect { case (`before`, s) if alone => s }.foreach { s =>
-      val known = s.fields.map(f => f.name -> f.dataType).toMap
-      val adds = written.fields.filterNot(f => partCols.contains(f.name))
-        .exists(f => !known.get(f.name).contains(f.dataType))
-      if (!adds) TableLog.commits(fs, tp)
-        .find(c => c.id == own.last && c.table == before.table)
-        .foreach(c => tableSchemaCache.replace(key, (before, s), (c.stamp, s)))
-    }
-  }
-
   /** Time-travel read: the table AS OF `commitId` — byte-identical to
     * what a reader saw after that commit published, however many batches
-    * landed since. The manifest log makes this free: a snapshot is just
-    * the commit prefix ≤ commitId (back to its preceding reset). The
-    * natural use at scale is a REPRODUCIBLE training snapshot: pin the
-    * commit id a run trained on and re-read it later, while ingestion
-    * keeps appending. Snapshots survive until the next reset commit's
-    * vacuum reclaims pre-reset files ([[TableLog.effectiveAt]]).
+    * landed since ([[ManifestTable.at]]). The natural use at scale is a
+    * REPRODUCIBLE training snapshot: pin the commit id a run trained on
+    * and re-read it later, while ingestion keeps appending. Snapshots
+    * survive until the next reset commit's vacuum reclaims pre-reset
+    * files ([[TableLog.effectiveAt]]).
     * @throws IllegalArgumentException for unknown ids or pre-manifest
     *         (legacy) tables */
   def tableAt(spark: SparkSession, root: String, dt: StockDataType,
       commitId: Long): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = storeFs(spark, tp)
-    val all = TableLog.commits(fs, tp)
-    require(all.nonEmpty, s"${dt.name} has no commit log (legacy table) — no history to travel")
-    require(all.exists(_.id == commitId),
-      s"unknown commit $commitId for ${dt.name}; have ${all.map(_.id).mkString(",")}")
-    val files = TableLog.effectiveAt(all, commitId)._1
-      .map(r => new org.apache.hadoop.fs.Path(tp, r).toString)
-    if (files.isEmpty)
+    val fs = ManifestTable.fs(spark, tp)
+    val s = ManifestTable.at(fs, tp, commitId)
+    if (s.data.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         table(spark, root, dt).schema)
-    else spark.read.option("mergeSchema", "true")
-      .option("basePath", tp.toString).parquet(files: _*)
+    else ManifestTable.relation(spark, fs, tp, s.data, s)
   }
 
   /** Commit ids currently in the log for `dt` (ascending) — the pinnable
     * snapshot handles for [[tableAt]]. */
   def commitIds(spark: SparkSession, root: String, dt: StockDataType): Seq[Long] = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = storeFs(spark, tp)
-    TableLog.commits(fs, tp).map(_.id)
-  }
-
-  /** One snapshot of the commit log: (last commit stamp, absolute committed
-    * data files), or None if the table predates the log. Reading id and
-    * file set from the SAME listing keeps the schema memo consistent when
-    * a commit lands concurrently with a read. */
-  private def committedState(fs: org.apache.hadoop.fs.FileSystem,
-      tp: org.apache.hadoop.fs.Path): Option[(TableLog.Commit.Stamp, Seq[String])] = {
-    val cs = TableLog.commits(fs, tp)
-    if (cs.isEmpty) None
-    else Some((cs.last.stamp, TableLog.effectiveFrom(cs)._1
-      .map(r => new org.apache.hadoop.fs.Path(tp, r).toString)))
+    TableLog.commits(ManifestTable.fs(spark, tp), tp).map(_.id)
   }
 
   /** Compact the small files that per-micro-batch appends accumulate
@@ -666,10 +519,10 @@ object StockStore {
 
   private def compactLocked(spark: SparkSession, root: String, dt: StockDataType): Long = {
     import org.apache.hadoop.fs.Path
-    val fs = storeFs(spark, new Path(root))
+    val fs = ManifestTable.fs(spark, new Path(root))
     val tp = new Path(tablePath(root, dt))
     val sp = new Path(statsLogPath(root, dt))
-    ensureLog(fs, tp, sp)
+    ManifestTable.ensureLog(fs, tp, Some(sp))
     val df = table(spark, root, dt)
     val partCols = Seq("ticker", "y", "m", "d").filter(df.columns.contains)
     val written = org.apache.spark.sql.Observation()
@@ -678,45 +531,34 @@ object StockStore {
       tp, partCols)
     // consolidated stats log: one row per key over the full table, same
     // written-rows semantics the per-batch log accumulates
-    val statsKeys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
-    val statsRel = InPlaceWrite.parquet(df.groupBy(statsKeys.map(col): _*)
-      .agg(count(lit(1)).as("row_count"),
-        min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
-      .coalesce(1), sp, Nil)
+    val statsRel = InPlaceWrite.parquet(statsRows(df, dt, statsKeys(dt)).coalesce(1), sp, Nil)
     TableLog.publish(fs, tp, dataRel, statsRel, reset = true)
     TableLog.vacuum(fs, tp, sp, stageRoot = Some(new Path(root)),
       stagePrefix = stagePrefix(dt))
     written.get("rows").asInstanceOf[Long]
   }
 
-  /** Migration/genesis commit, published BEFORE a writer puts files in
-    * the table's directories: a pre-manifest table snapshots its legacy
-    * files into their own commit; a fresh table publishes an empty
-    * genesis commit. Either way the log exists from here on, so a crash
-    * between a write and its publish leaves the written files
-    * UNREFERENCED (invisible, vacuumable) — a later run can never sweep
-    * a torn batch in as "legacy" data. */
-  private def ensureLog(fs: org.apache.hadoop.fs.FileSystem, tp: org.apache.hadoop.fs.Path,
-      sp: org.apache.hadoop.fs.Path): Unit =
-    if (!TableLog.exists(fs, tp))
-      TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp), TableLog.legacyFiles(fs, sp))
-
   /** A7: per-ticker stats view (reference __table_stats__,
     * sql_db.py:559-599). Parquet footers already carry min/max; this
     * materializes the discovery-API shape. */
   def tableStats(spark: SparkSession, root: String, dt: StockDataType): DataFrame =
-    table(spark, root, dt).groupBy(col("ticker"))
-      .agg(count(lit(1)).as("row_count"),
-        min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
+    statsRows(table(spark, root, dt), dt, Seq("ticker"))
 
   /** A8: per-(ticker, interval) stats view (reference __interval_stats__,
     * sql_db.py:601-669). */
   def intervalStats(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     require(dt.extraIndexCols.contains("interval"), s"${dt.name} has no interval column")
-    table(spark, root, dt).groupBy(col("ticker"), col("interval"))
-      .agg(count(lit(1)).as("row_count"),
-        min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
+    statsRows(table(spark, root, dt), dt, Seq("ticker", "interval"))
   }
+
+  /** The stats log's keys: per ticker, and per interval where `dt` has one. */
+  private def statsKeys(dt: StockDataType) =
+    Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
+
+  /** A7/A8 rows of `df`: its row count and event-time range per `keys`. */
+  private def statsRows(df: DataFrame, dt: StockDataType, keys: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("row_count"),
+      min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
 
   private def statsLogPath(root: String, dt: StockDataType) = s"$root/${dt.name}__stats"
 
@@ -758,17 +600,14 @@ object StockStore {
     * WRITTEN (post-dedup, including versioned conflicts), same as the
     * scan views. */
   def incrementalStats(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
-    val keys = Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
-    val fs = storeFs(spark, tp)
-    val log =
-      if (TableLog.exists(fs, tp)) {
-        val files = TableLog.effective(fs, tp)._2
-          .map(r => new org.apache.hadoop.fs.Path(sp, r).toString)
-        spark.read.parquet(files: _*)
-      } else spark.read.parquet(statsLogPath(root, dt))
-    log.groupBy(keys.map(col): _*)
+    val fs = ManifestTable.fs(spark, tp)
+    val log = ManifestTable.latest(fs, tp) match {
+      case Some(s) => ManifestTable.relation(spark, fs, sp, s.stats, s)
+      case None => spark.read.parquet(statsLogPath(root, dt))
+    }
+    log.groupBy(statsKeys(dt).map(col): _*)
       .agg(sum(col("row_count")).as("row_count"),
         min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"))
   }

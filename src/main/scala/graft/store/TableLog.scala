@@ -244,17 +244,7 @@ object TableLog {
     * once [[vacuum]] prunes the superseded manifests. Returns the squash
     * commit id, or -1 when the log has fewer than two live manifests
     * (nothing to squash). */
-  def checkpoint(fs: FileSystem, tablePath: Path): Long =
-    lockFor(fs, tablePath).synchronized {
-      val all = commits(fs, tablePath)
-      val lastReset = all.lastIndexWhere(_.reset)
-      val liveManifests = if (lastReset < 0) all.length else all.length - lastReset
-      if (liveManifests < 2) -1L
-      else {
-        val (data, stats) = effectiveFrom(all)
-        publish(fs, tablePath, data, stats, reset = true)
-      }
-    }
+  def checkpoint(fs: FileSystem, tablePath: Path): Long = maybeCheckpoint(fs, tablePath, 2)
 
   /** [[checkpoint]] only when `every` or more manifests are live — the
     * amortized form an upsert loop calls after each publish. Returns the
@@ -264,8 +254,6 @@ object TableLog {
       val all = commits(fs, tablePath)
       val lastReset = all.lastIndexWhere(_.reset)
       val liveManifests = if (lastReset < 0) all.length else all.length - lastReset
-      // squash from the commit list already in hand ([[checkpoint]] would
-      // re-list and re-read the log — the upsert loop pays this per batch)
       if (liveManifests < every || liveManifests < 2) -1L
       else {
         val (data, stats) = effectiveFrom(all)

@@ -2,7 +2,7 @@ package graft.tools
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.model.StockDataType
-import graft.store.StockStore
+import graft.store.{ManifestTable, StockStore}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -122,7 +122,7 @@ object InspectServer {
   /** Data types with a published table under this root. */
   def presentTypes(spark: SparkSession, root: String): Seq[StockDataType] = {
     val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = ManifestTable.fs(spark, rp)
     StockDataType.all.filter(dt => fs.exists(new org.apache.hadoop.fs.Path(rp, dt.name)))
   }
 

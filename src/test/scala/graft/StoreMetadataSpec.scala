@@ -130,26 +130,40 @@ class StoreMetadataSpec extends AnyFunSuite {
       .toDF("timestamp", "price", "volume", "version")
       .coalesce(1).write.mode("overwrite").parquet(template)
     val file = new java.io.File(template).listFiles().filter(_.getName.endsWith(".parquet")).head
-    // 60 day partitions of 10 files each, copied in with java.nio (a
-    // Spark write forks permission calls per file) and committed as one
-    // manifest, so no status of theirs is in this process's cache
-    val root = SparkTestSession.tempDir("store-listing-600")
-    val rels = for (t <- 0 until 60; i <- 0 until 10) yield {
-      val rel = f"ticker=L$t%02d/y=2025/m=7/d=2/part-$i%02d.parquet"
-      val dest = java.nio.file.Paths.get(s"$root/streaming/$rel")
-      java.nio.file.Files.createDirectories(dest.getParent)
-      java.nio.file.Files.copy(file.toPath, dest)
-      rel
+    // 60 partitions of 10 files each under `table`, copied in with
+    // java.nio (a Spark write forks permission calls per file) and
+    // committed as one manifest, so no status of theirs is in this
+    // process's cache; returns the root and the commit id
+    def unseen(name: String, table: String, dir: Int => String): (String, Long) = {
+      val root = SparkTestSession.tempDir(s"store-listing-600-$name")
+      val rels = for (t <- 0 until 60; i <- 0 until 10) yield {
+        val rel = f"${dir(t)}/part-$i%02d.parquet"
+        val dest = java.nio.file.Paths.get(s"$root/$table/$rel")
+        java.nio.file.Files.createDirectories(dest.getParent)
+        java.nio.file.Files.copy(file.toPath, dest)
+        rel
+      }
+      (root, TableLog.publish(fs(root), new Path(s"$root/$table"), rels, Nil))
     }
-    TableLog.publish(fs(root), new Path(s"$root/streaming"), rels, Nil)
+    val day = (t: Int) => f"ticker=L$t%02d/y=2025/m=7/d=2"
 
     // the one job left is the footer-schema merge every first read of a
     // table runs; Spark's parallel listing (one task per file) would be
-    // a second, as it was when the index listed the files itself
-    val (df, jobs) = SparkTestSession.jobsDuring(StockStore.table(spark, root, Streaming))
-    assert(jobs == 1, s"building the table started $jobs Spark job(s)")
-    assert(df.count() == 600)
-    assert(df.select("ticker").distinct().count() == 60)
+    // a second, as it was when the index listed the files itself. The
+    // as-of read and the corpus read build the same relation.
+    val reads = Seq[(String, String, Int => String, String, (String, Long) => DataFrame)](
+      ("table", "streaming", day, "ticker", (root, _) => StockStore.table(spark, root, Streaming)),
+      ("tableAt", "streaming", day, "ticker",
+        (root, id) => StockStore.tableAt(spark, root, Streaming, id)),
+      ("corpus", "corpus", t => f"split=train/lang=L$t%02d", "lang",
+        (root, _) => graft.corpus.CorpusStore.read(spark, root)))
+    reads.foreach { case (name, table, dir, partCol, read) =>
+      val (root, id) = unseen(name, table, dir)
+      val (df, jobs) = SparkTestSession.jobsDuring(read(root, id))
+      assert(jobs == 1, s"building $name started $jobs Spark job(s)")
+      assert(df.count() == 600)
+      assert(df.select(partCol).distinct().count() == 60)
+    }
   }
 
   test("a column another writer commits inside an upsert stays visible after it") {
