@@ -40,7 +40,7 @@ object CorpusStore {
     val tp = new Path(tablePath(root))
     val fs = ManifestTable.fs(spark, tp)
     val rows = if (docs.columns.contains("split")) docs else withSplit(docs)
-    ManifestTable.ensureLog(fs, tp, None)
+    ManifestTable.ensureLog(fs, tp)
     val rel = InPlaceWrite.parquet(
       rows.repartition(col("split"), col("lang")), // one file per partition dir
       tp, Seq("split", "lang"))

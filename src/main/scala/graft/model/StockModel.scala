@@ -18,8 +18,11 @@ sealed trait StockDataType {
   def tsCol: String
   /** index columns beyond ticker+ts (reference: sql_db.py:59-67) */
   def extraIndexCols: Seq[String]
+  /** the declared index and payload columns, typed as the transform
+    * (`EodhdTransform`) emits them */
+  def columns: StructType
   /** payload (non-index, non-version) columns */
-  def payloadCols: Seq[String]
+  def payloadCols: Seq[String] = columns.fieldNames.toSeq.filterNot(indexCols.contains)
   def indexCols: Seq[String] = Seq("ticker", tsCol) ++ extraIndexCols
   /** valid `interval` domain, if the type carries one (T4) */
   def intervalDomain: Option[Seq[String]]
@@ -29,7 +32,9 @@ case object HistoricalInterday extends StockDataType {
   val name = "historical_interday"
   val tsCol = "date"
   val extraIndexCols = Seq("interval")
-  val payloadCols = Seq("open", "high", "low", "close", "adjusted_close", "volume")
+  val columns = StockDataType.fields("ticker" -> StringType, "date" -> DateType,
+    "interval" -> StringType, "open" -> DoubleType, "high" -> DoubleType, "low" -> DoubleType,
+    "close" -> DoubleType, "adjusted_close" -> DoubleType, "volume" -> LongType)
   val intervalDomain = Some(Seq("d", "w", "m"))
 }
 
@@ -37,7 +42,9 @@ case object HistoricalIntraday extends StockDataType {
   val name = "historical_intraday"
   val tsCol = "timestamp"
   val extraIndexCols = Seq("interval")
-  val payloadCols = Seq("open", "high", "low", "close", "volume")
+  val columns = StockDataType.fields("ticker" -> StringType, "timestamp" -> TimestampType,
+    "interval" -> StringType, "open" -> DoubleType, "high" -> DoubleType, "low" -> DoubleType,
+    "close" -> DoubleType, "volume" -> LongType)
   val intervalDomain = Some(Seq("1m", "5m", "1h"))
 }
 
@@ -47,7 +54,9 @@ case object Streaming extends StockDataType {
   val name = "streaming"
   val tsCol = "timestamp"
   val extraIndexCols = Seq.empty
-  val payloadCols = Seq("price", "volume", "ask_price", "bid_price", "ask_size", "bid_size")
+  val columns = StockDataType.fields("ticker" -> StringType, "timestamp" -> TimestampType,
+    "price" -> DoubleType, "volume" -> LongType, "ask_price" -> DoubleType,
+    "bid_price" -> DoubleType, "ask_size" -> LongType, "bid_size" -> LongType)
   val intervalDomain = None
 }
 
@@ -55,6 +64,9 @@ object StockDataType {
   val all: Seq[StockDataType] = Seq(HistoricalInterday, HistoricalIntraday, Streaming)
   def byName(n: String): StockDataType =
     all.find(_.name == n).getOrElse(throw new IllegalArgumentException(s"unknown data_type: $n"))
+
+  private[model] def fields(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
 }
 
 object StockSchemas {

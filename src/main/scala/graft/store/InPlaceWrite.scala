@@ -5,6 +5,7 @@ import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.WriteJobStatsTracker
 import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** The store's one file writer: parquet written straight into a table's
@@ -20,11 +21,15 @@ import org.apache.spark.sql.graftbridge.GraftBridge
 object InPlaceWrite {
 
   /** Write `df` under `base`, partitioned by `partCols`, and return the
-    * written files relative to `base`, unpublished. */
-  def parquet(df: DataFrame, base: Path, partCols: Seq[String]): Seq[String] = {
+    * written files relative to `base`, unpublished. A `stats` tracker
+    * sees every written row in the write's own tasks and gets their
+    * stats on the driver once the job commits (see [[FileStats]]). */
+  def parquet(df: DataFrame, base: Path, partCols: Seq[String],
+      stats: Option[WriteJobStatsTracker] = None): Seq[String] = {
     val protocol = new InPlaceCommitProtocol(java.util.UUID.randomUUID().toString, base.toString)
     GraftBridge.writeParquet(df, base.toString, partCols, protocol,
-      LocalStoreFs.writeOptions(base, df.sparkSession.sparkContext.hadoopConfiguration))
+      LocalStoreFs.writeOptions(base, df.sparkSession.sparkContext.hadoopConfiguration),
+      stats.toSeq)
     protocol.committed
   }
 }

@@ -25,11 +25,12 @@ object ManifestTable {
     LocalStoreFs.forPath(p, spark.sparkContext.hadoopConfiguration)
 
   /** A table's committed files as of one commit: `stamp` names the
-    * commit, `data` and `stats` are its effective files, relative to the
-    * table and stats directories, and `latest` says whether the commit
-    * was the log's last when it was read. */
+    * commit, `data` are its effective files, relative to the table
+    * directory, `fileStats` the stats lines published for them, and
+    * `latest` says whether the commit was the log's last when it was
+    * read. */
   final case class Snapshot(stamp: TableLog.Commit.Stamp, data: Seq[String],
-      stats: Seq[String], latest: Boolean)
+      fileStats: Seq[TableLog.FileStatsLine], latest: Boolean)
 
   /** The log's last commit, or None if the table predates the log (or is
     * absent). Reading id and file set from the SAME listing keeps the
@@ -52,22 +53,20 @@ object ManifestTable {
   }
 
   private def snapshot(all: Seq[TableLog.Commit], c: TableLog.Commit): Snapshot = {
-    val (data, stats) = TableLog.effectiveAt(all, c.id)
-    Snapshot(c.stamp, data, stats, latest = c.id == all.last.id)
+    val (data, fileStats) = TableLog.effectiveAt(all, c.id)
+    Snapshot(c.stamp, data, fileStats, latest = c.id == all.last.id)
   }
 
   /** Migration/genesis commit, published BEFORE a writer puts files in
     * the table's directories: a pre-manifest table snapshots its legacy
-    * files (and those of its stats dir `sp`, if it has one) into their
-    * own commit; a fresh table publishes an empty genesis commit. Either
+    * files into their own commit, with no stats; a fresh table publishes
+    * an empty genesis commit. Either
     * way the log exists from here on, so a crash between a write and its
     * publish leaves the written files UNREFERENCED (invisible,
     * vacuumable) — a later run can never sweep a torn batch in as
     * "legacy" data. */
-  def ensureLog(fs: FileSystem, tp: Path, sp: Option[Path]): Unit =
-    if (!TableLog.exists(fs, tp))
-      TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp),
-        sp.fold(Seq.empty[String])(TableLog.legacyFiles(fs, _)))
+  def ensureLog(fs: FileSystem, tp: Path): Unit =
+    if (!TableLog.exists(fs, tp)) TableLog.publish(fs, tp, TableLog.legacyFiles(fs, tp), Nil)
 
   // Union-schema memo per directory, valid for one commit stamp: inferring
   // it reads every file's footer (a Spark job), and [[carrySchemaMemo]]
@@ -90,14 +89,16 @@ object ManifestTable {
     fileStatusCache
   }
 
-  /** The relation over `files` of snapshot `s`, relative to `base` (the
-    * table or the stats directory): what `spark.read.option("mergeSchema",
+  /** The relation over `files` of snapshot `s`, relative to the table
+    * directory `base`: what `spark.read.option("mergeSchema",
     * "true").option("basePath", base).parquet(files)` builds, with the
     * shared status cache and the memoized schema, so it neither globs nor
     * lists what it has seen and starts no listing job for what it has
     * not. The union schema (A10) reads old rows with null in a
     * dynamically-added column; `basePath` keeps partition inference, and
-    * so Catalyst partition pruning, as on a plain directory read. */
+    * so Catalyst partition pruning, as on a plain directory read. A read
+    * of only some of a snapshot's files passes it with `latest = false`,
+    * so their schema never stands as the whole commit's memo. */
   def relation(spark: SparkSession, fs: FileSystem, base: Path, files: Seq[String],
       s: Snapshot): DataFrame = {
     require(files.nonEmpty, s"commit ${s.stamp.id} references no files under $base")

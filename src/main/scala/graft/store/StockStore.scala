@@ -4,7 +4,7 @@ import graft.functions.TimeFunctions
 import graft.model._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Partitioned columnar store with the reference writer's semantics
@@ -67,29 +67,37 @@ object StockStore {
     * keeping the squash (an O(files) vacuum) amortized across batches. */
   val AutoSquashEvery: Int = 64
 
-  /** Read the stored table, or an empty frame with `schema` if absent,
-    * plus the stamp of the commit it read (None for an absent, empty or
-    * legacy table) — the upsert carries the schema memo forward from it
-    * after publishing ([[ManifestTable.carrySchemaMemo]]). The existence
-    * probe goes through Hadoop FileSystem so the store works on HDFS/S3
-    * paths too — a java.io.File probe would silently report "absent"
-    * there and make [[upsert]] treat a populated table as empty. The union schema
-    * (A10) reads rows written before a dynamic column arrived with that
-    * column null. */
-  private def readBack(spark: SparkSession, root: String, dt: StockDataType,
-      schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, Option[TableLog.Commit.Stamp]) = {
-    val p = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = ManifestTable.fs(spark, p)
-    ManifestTable.latest(fs, p) match {
-      // reuse the snapshot just read instead of a second commits() pass —
-      // the streaming sink calls this every micro-batch
+  /** The stored rows and the stamp of the commit they were read at: the
+    * live files of the table's commit log; with no log, the whole table
+    * directory (the legacy layout, no stamp); or None when there is
+    * nothing to read — no table, or a log whose live set is empty. Once a
+    * log exists, a file no commit references is never read, so a write
+    * that failed before its publish stays invisible. The probes go
+    * through Hadoop FileSystem, so HDFS/S3 paths work too. The union
+    * schema (A10) reads rows written before a dynamic column arrived
+    * with that column null. The upsert carries the schema memo forward
+    * from the stamp after publishing ([[ManifestTable.carrySchemaMemo]]). */
+  private def committed(spark: SparkSession, root: String, dt: StockDataType)
+      : Option[(DataFrame, Option[TableLog.Commit.Stamp])] = {
+    val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
+    val fs = ManifestTable.fs(spark, tp)
+    ManifestTable.latest(fs, tp) match {
       case Some(s) if s.data.nonEmpty =>
-        (ManifestTable.relation(spark, fs, p, s.data, s), Some(s.stamp))
-      case None if fs.exists(p) => (table(spark, root, dt), None) // legacy layout
-      case _ => // absent, or a commit log with nothing committed yet
-        (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), None)
+        Some((ManifestTable.relation(spark, fs, tp, s.data, s), Some(s.stamp)))
+      case None if fs.exists(tp) =>
+        Some((spark.read.option("mergeSchema", "true").parquet(tablePath(root, dt)), None))
+      case _ => None
     }
+  }
+
+  private def empty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** The partition columns of `dt`'s layout, ticker first. */
+  private def partitionCols(dt: StockDataType): Seq[String] = dt match {
+    case HistoricalInterday => Seq("ticker", "y")
+    case HistoricalIntraday => Seq("ticker", "y", "m")
+    case Streaming => Seq("ticker", "y", "m", "d")
   }
 
   /** Touched partitions a batch may carry before the read-back prune
@@ -123,16 +131,17 @@ object StockStore {
     * insert (writer.py:259-353). Returns exact write stats (the reference
     * acks each message; we report counts).
     *
-    * The merge runs in four labelled steps: "touched tuples + batch pin"
+    * The merge runs in three labelled steps: "touched tuples + batch pin"
     * caches the deduplicated batch and fires every diagnostic
     * observation (input, null skips, deduplicated rows, the event-time
     * window and the capped touched-partition set) — a batch that keeps
     * no row returns its stats right there; "merge + pin output", one
     * exchange over the batch and its pruned read-back, whose observation
     * counts the rows to write and their first versions; then, only when
-    * something is new, "stats rows" and "stage data write" write the
-    * stats-log and data files in place ([[InPlaceWrite]]), and one
-    * manifest publishes them. The A6 index check is an assert_true guard
+    * something is new, "stage data write" writes the data files in place
+    * ([[InPlaceWrite]]), gathering each file's A7/A8 stats in its own
+    * tasks ([[FileStats]]), and one manifest publishes files and stats.
+    * The A6 index check is an assert_true guard
     * compiled into the A5 filter, so a violating batch fails the first
     * step, before anything is written or committed. */
   def upsert(spark: SparkSession, root: String, dt: StockDataType,
@@ -149,7 +158,7 @@ object StockStore {
     // ALTER TABLE ADD COLUMN, sql_db.py:306-343). They take part in
     // payload equality (A3) and versioning (A4) like any other payload
     // column, land in the new files, and older rows read back with the
-    // column null (the union schema of [[readBack]]/[[table]]) — the
+    // column null (the union schema of [[committed]]) — the
     // columnar analog of the reference's null-backfilled ALTER TABLE.
     val declared = dt.payloadCols.filter(batch.columns.contains)
     val reserved = (dt.indexCols ++ dt.payloadCols ++ Seq("version", "y", "m", "d")).toSet
@@ -215,11 +224,7 @@ object StockStore {
       case _ => col(dt.tsCol)
     }
     val (py, pmo, pda) = TimeFunctions.localCalendarParts(eventTs, exchangeTz)
-    val partCols = dt match {
-      case HistoricalInterday => Seq("ticker", "y")
-      case HistoricalIntraday => Seq("ticker", "y", "m")
-      case Streaming => Seq("ticker", "y", "m", "d")
-    }
+    val partCols = partitionCols(dt)
 
     // Existing rows for the batch's keys: the read-back SCAN is pruned
     // to the batch's own partition tuples: an index key's store rows can
@@ -322,8 +327,8 @@ object StockStore {
         case _ => None
       }
     }
-    val (existingRaw0, readStamp) = readBack(spark, root, dt,
-      deduped.withColumn("version", lit(1)).schema)
+    val (existingRaw0, readStamp) = committed(spark, root, dt)
+      .getOrElse((empty(spark, deduped.withColumn("version", lit(1)).schema), None))
     val existingRaw1 = prune
       .filter(_ => existingRaw0.columns.contains(pruneCols.last))
       .map(existingRaw0.where).getOrElse(existingRaw0)
@@ -345,14 +350,14 @@ object StockStore {
     // (eventTs/partCols defined with the pruned read-back above)
     val outLazy = versioned.withColumn("y", py).withColumn("m", pmo).withColumn("d", pda)
       .select((idxCols ++ payloadCols ++ Seq("version") ++ partCols.drop(1)).distinct.map(col): _*)
-    // Pin the merge output ONCE (eager localCheckpoint): the stats rows
-    // and the data write both read it, and each would otherwise
-    // re-execute the whole merge (read-back scan, exchange, windows).
-    // The pinned blocks hold only new rows, so they are small wherever
-    // the batch is (guide §5: localCheckpoint to cut lineage / avoid
-    // recompute); they release via the context cleaner once the batch's
-    // frame is unreferenced. The same job observes `written` and the
-    // first-version count.
+    // Pin the merge output ONCE (eager localCheckpoint): the same job
+    // observes `written` and the first-version count, so a batch with
+    // nothing new writes and publishes nothing, and the data write reads
+    // the pinned rows instead of re-executing the whole merge (read-back
+    // scan, exchange, windows). The pinned blocks hold only new rows, so
+    // they are small wherever the batch is (guide §5: localCheckpoint to
+    // cut lineage / avoid recompute); they release via the context
+    // cleaner once the batch's frame is unreferenced.
     val out = labeled("merge + pin output") {
       outLazy.observe(outObs, count(lit(1)).as("written"),
         count(when(col("version") === 1, lit(1))).as("v1")).localCheckpoint(true)
@@ -361,58 +366,39 @@ object StockStore {
     val firstVersions = outObs.get("v1").asInstanceOf[Long]
 
     // A12 transactional batch commit (reference: sql_db.py:455,553-557 —
-    // BEGIN IMMEDIATE around the whole batch): data files and the batch's
-    // A7/A8 stats-log row (the reference's O(1) running min/max/count
-    // maintenance, sql_db.py:34-40,559-669) are written in place, into
-    // their final directories ([[InPlaceWrite]]), and made visible
-    // together by one atomic manifest create ([[TableLog]]). A crash
-    // anywhere before that create leaves only unreferenced files —
-    // readers see the pre-batch state, stats can never drift from data,
-    // and [[TableLog.vacuum]] (run under this table's writer lock)
-    // reclaims them. Readers merge the stats log (sum/min/max
-    // re-aggregate losslessly) and never scan the data, however large
-    // the table grows.
+    // BEGIN IMMEDIATE around the whole batch): data files are written in
+    // place, into their final directories ([[InPlaceWrite]]), and made
+    // visible by one atomic manifest create ([[TableLog]]) that also
+    // carries each file's A7/A8 stats (the reference's running
+    // min/max/count, updated in the insert's transaction,
+    // sql_db.py:34-40,559-669). A crash anywhere before that create
+    // leaves only unreferenced files — readers see the pre-batch state,
+    // stats can never drift from data, and [[TableLog.vacuum]] (run
+    // under this table's writer lock) reclaims them.
     if (written > 0) {
       val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-      val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
-      ManifestTable.ensureLog(fs, tp, Some(sp))
+      ManifestTable.ensureLog(fs, tp)
       // Pin the table's partitioning tz on first publish; later upserts
       // with a different tz fall back to ticker-only read-back pruning.
       writeTzMarkerIfAbsent(fs, tzMarkerPath(root, dt), exchangeTz)
-      // The per-ticker stats rows, one file. A batch-bounded merge
-      // aggregates its pinned output on one partition, which satisfies
-      // the grouping, so the aggregate adds no exchange. Both writes read
-      // only the pinned output, so the stats job runs beside the data
-      // write, from a thread of its own that inherits this thread's job
-      // properties (the trigger's batch id, tags); the publish waits for
-      // both, and a failure of either fails the upsert.
-      val statsWrite = new java.util.concurrent.FutureTask[Seq[String]](() => labeled("stats rows") {
-        InPlaceWrite.parquet(statsRows(if (smallBatch) out.coalesce(1) else out, dt, statsKeys(dt))
-          .coalesce(1), sp, Nil)
-      })
-      new Thread(statsWrite, s"upsert-stats-${dt.name}").start()
       // One file per touched partition either way. A batch-bounded
       // merge writes its pinned output as it lies — clustered by ticker,
       // so the write costs no exchange and no AQE wave, and its tasks
       // write disjoint partition dirs side by side; a bulk backfill
       // keeps the hash repartition. The label predates the in-place
       // write.
-      val dataRel = try labeled("stage data write") {
-        InPlaceWrite.parquet(
-          if (smallBatch) out else out.repartition(partCols.map(col): _*),
-          tp, partCols)
-      } catch { case t: Throwable => scala.util.Try(statsWrite.get()); throw t }
-      val statsRel = try statsWrite.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      val (dataRel, stats) = labeled("stage data write") {
+        writeWithStats(if (smallBatch) out else out.repartition(partCols.map(col): _*),
+          tp, partCols, dt)
       }
-      val published = TableLog.publish(fs, tp, dataRel, statsRel)
+      val published = TableLog.publish(fs, tp, dataRel, stats)
       // Manifest squash: a streaming sink lands one manifest per
       // micro-batch and every read pays an O(commits) listing. Each
       // AutoSquashEvery commits, fold the live set into one reset
       // manifest (no data rewrite) and prune the superseded manifests —
       // commit listing stays O(1) however long the stream runs.
       val squash = TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery)
-      if (squash >= 0) TableLog.vacuum(fs, tp, sp)
+      if (squash >= 0) TableLog.vacuum(fs, tp)
       readStamp.foreach(ManifestTable.carrySchemaMemo(fs, tp, _,
         if (squash >= 0) Seq(published, squash) else Seq(published),
         out.schema, partCols))
@@ -462,20 +448,28 @@ object StockStore {
       .select((fields :+ "version").map(col): _*)
   }
 
+  /** Write `df` in place under `tp`, unpublished: its files, and the
+    * stats lines the write gathered for them. */
+  private def writeWithStats(df: DataFrame, tp: org.apache.hadoop.fs.Path, partCols: Seq[String],
+      dt: StockDataType): (Seq[String], Seq[TableLog.FileStatsLine]) = {
+    val stats = FileStats.tracker(df.schema, partCols, dt.tsCol, intervalCol(dt))
+    val files = InPlaceWrite.parquet(df, tp, partCols, stats)
+    (files, stats.fold(Seq.empty[TableLog.FileStatsLine])(_.lines(tp, files)))
+  }
+
   /** Read the stored table (post-merge). Manifest-aware: only files a
     * committed manifest references are visible (a crashed half-written
     * batch is not), read through [[ManifestTable.relation]]; tables
     * without a commit log (legacy layout) read the directory, with the
-    * same union schema (A10). */
-  def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
-    val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val fs = ManifestTable.fs(spark, tp)
-    ManifestTable.latest(fs, tp) match {
-      case Some(s) if s.data.nonEmpty => ManifestTable.relation(spark, fs, tp, s.data, s)
-      case _ =>
-        spark.read.option("mergeSchema", "true").parquet(tablePath(root, dt))
-    }
-  }
+    * same union schema (A10). A table with nothing to read is an empty
+    * frame of `dt`'s declared columns and partition layout. */
+  def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame =
+    committed(spark, root, dt).fold {
+      val parts = partitionCols(dt)
+      empty(spark, StructType(dt.columns.filterNot(f => parts.contains(f.name)) ++
+        Seq(StructField("version", IntegerType)) ++
+        parts.map(p => StructField(p, if (p == "ticker") StringType else IntegerType))))
+    }(_._1)
 
   /** Time-travel read: the table AS OF `commitId` — byte-identical to
     * what a reader saw after that commit published, however many batches
@@ -492,8 +486,7 @@ object StockStore {
     val fs = ManifestTable.fs(spark, tp)
     val s = ManifestTable.at(fs, tp, commitId)
     if (s.data.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        table(spark, root, dt).schema)
+      empty(spark, table(spark, root, dt).schema)
     else ManifestTable.relation(spark, fs, tp, s.data, s)
   }
 
@@ -506,13 +499,14 @@ object StockStore {
 
   /** Compact the small files that per-micro-batch appends accumulate
     * (SURVEY §7.4 risk 5): rewrite the table so each partition directory
-    * holds one file again, preserving every row/version, plus ONE
-    * consolidated stats-log file. The swap is a `reset` commit in the
+    * holds one file again, preserving every row/version, each new file
+    * with its stats. The swap is a `reset` commit in the
     * [[TableLog]] manifest — readers atomically flip from the old file
     * set to the new one (no delete-then-rename window), and old files and
     * superseded manifests are vacuumed afterwards. The reference
     * sidesteps compaction because SQLite updates B-trees in place; a
-    * columnar store pays it as a periodic maintenance job instead.
+    * columnar store pays it as a periodic maintenance job instead. A
+    * table with nothing committed is left as it is.
     * @return number of rows in the compacted table */
   def compact(spark: SparkSession, root: String, dt: StockDataType): Long =
     writerLock(root, dt).synchronized { compactLocked(spark, root, dt) }
@@ -521,21 +515,17 @@ object StockStore {
     import org.apache.hadoop.fs.Path
     val fs = ManifestTable.fs(spark, new Path(root))
     val tp = new Path(tablePath(root, dt))
-    val sp = new Path(statsLogPath(root, dt))
-    ManifestTable.ensureLog(fs, tp, Some(sp))
-    val df = table(spark, root, dt)
-    val partCols = Seq("ticker", "y", "m", "d").filter(df.columns.contains)
-    val written = org.apache.spark.sql.Observation()
-    val dataRel = InPlaceWrite.parquet(
-      df.repartition(partCols.map(col): _*).observe(written, count(lit(1)).as("rows")),
-      tp, partCols)
-    // consolidated stats log: one row per key over the full table, same
-    // written-rows semantics the per-batch log accumulates
-    val statsRel = InPlaceWrite.parquet(statsRows(df, dt, statsKeys(dt)).coalesce(1), sp, Nil)
-    TableLog.publish(fs, tp, dataRel, statsRel, reset = true)
-    TableLog.vacuum(fs, tp, sp, stageRoot = Some(new Path(root)),
-      stagePrefix = stagePrefix(dt))
-    written.get("rows").asInstanceOf[Long]
+    ManifestTable.ensureLog(fs, tp)
+    committed(spark, root, dt).fold(0L) { case (df, _) =>
+      val partCols = Seq("ticker", "y", "m", "d").filter(df.columns.contains)
+      val written = org.apache.spark.sql.Observation()
+      val (dataRel, stats) = writeWithStats(
+        df.repartition(partCols.map(col): _*).observe(written, count(lit(1)).as("rows")),
+        tp, partCols, dt)
+      TableLog.publish(fs, tp, dataRel, stats, reset = true)
+      TableLog.vacuum(fs, tp, stageRoot = Some(new Path(root)), stagePrefix = stagePrefix(dt))
+      written.get("rows").asInstanceOf[Long]
+    }
   }
 
   /** A7: per-ticker stats view (reference __table_stats__,
@@ -551,16 +541,13 @@ object StockStore {
     statsRows(table(spark, root, dt), dt, Seq("ticker", "interval"))
   }
 
-  /** The stats log's keys: per ticker, and per interval where `dt` has one. */
-  private def statsKeys(dt: StockDataType) =
-    Seq("ticker") ++ dt.extraIndexCols.filter(_ == "interval")
+  /** The interval column, where `dt` has one: the stats' key beside the ticker. */
+  private def intervalCol(dt: StockDataType) = dt.extraIndexCols.find(_ == "interval")
 
   /** A7/A8 rows of `df`: its row count and event-time range per `keys`. */
   private def statsRows(df: DataFrame, dt: StockDataType, keys: Seq[String]): DataFrame =
     df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("row_count"),
       min(col(dt.tsCol)).as("min_ts"), max(col(dt.tsCol)).as("max_ts"))
-
-  private def statsLogPath(root: String, dt: StockDataType) = s"$root/${dt.name}__stats"
 
   /** Partitioning-identity marker: the tz that stamped this table's
     * (y,m,d) partition columns, persisted on first publish. Upserts
@@ -593,23 +580,37 @@ object StockStore {
       finally out.close()
     } catch { case _: java.io.IOException => () } // lost the create race: marker stands
 
-  /** A7/A8 without touching the data: merge the per-batch stats log that
-    * [[upsert]] appends. Equals the full-scan view (StatsSpec) at a cost
-    * proportional to the number of batches, not rows — the discovery
-    * query stays cheap at any table size. Note: rows are counted as
+  /** A7/A8 without touching the data: fold the per-file stats the
+    * manifest carries ([[FileStats]]), on the driver. Equals the
+    * full-scan view (StatsSpec) at a cost proportional to the number of
+    * files, not rows — the discovery query stays cheap at any table
+    * size. A live file whose manifest carries no stats (written before
+    * files carried them, or a legacy pre-manifest file) is scanned
+    * instead; so is a table with no log. Note: rows are counted as
     * WRITTEN (post-dedup, including versioned conflicts), same as the
     * scan views. */
   def incrementalStats(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
-    val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
     val fs = ManifestTable.fs(spark, tp)
-    val log = ManifestTable.latest(fs, tp) match {
-      case Some(s) => ManifestTable.relation(spark, fs, sp, s.stats, s)
-      case None => spark.read.parquet(statsLogPath(root, dt))
+    val keys = Seq("ticker") ++ intervalCol(dt)
+    val (logged, unlogged) = ManifestTable.latest(fs, tp) match {
+      case Some(s) =>
+        val withStats = s.fileStats.map(_.file).toSet
+        val rest = s.data.filterNot(withStats)
+        (FileStats.rows(spark, s.fileStats, intervalCol(dt)),
+          Some(rest).filter(_.nonEmpty)
+            .map(ManifestTable.relation(spark, fs, tp, _, s.copy(latest = false))))
+      case None => (Nil, committed(spark, root, dt).map(_._1))
     }
-    log.groupBy(statsKeys(dt).map(col): _*)
-      .agg(sum(col("row_count")).as("row_count"),
-        min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"))
+    val scanned = unlogged.map(df =>
+      statsRows(df.withColumn("ticker", col("ticker").cast("string")), dt, keys))
+    logged ++ scanned match {
+      case Seq() => empty(spark, FileStats.schema(intervalCol(dt), dt.columns(dt.tsCol).dataType))
+      case Seq(one) => one
+      case parts => parts.reduce(_ unionByName _).groupBy(keys.map(col): _*)
+        .agg(sum(col("row_count")).as("row_count"),
+          min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"))
+    }
   }
 
   /** A9: provider/exchange metadata (reference __meta__ seeding,

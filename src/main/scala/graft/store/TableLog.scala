@@ -15,13 +15,14 @@ import java.nio.charset.StandardCharsets
   *      overwrites);
   *   2. visibility is granted by ONE exclusively-created, self-validating
   *      manifest file at `_commits/NNNNNNNNNN.commit`; the manifest lists
-  *      every data and stats file the commit adds and closes with an
-  *      `end` sentinel. A crash before the sentinel lands leaves a torn
-  *      manifest readers skip, and orphan files no manifest references —
-  *      invisible to readers and reclaimed by [[vacuum]].
-  * Because a commit lists data files AND the batch's stats-log files, the
-  * two become visible together — closing the window where a crash
-  * between the stats append and the data append skews incremental stats.
+  *      every data file the commit adds, with the stats the write gathered
+  *      for it, and closes with an `end` sentinel. A crash before the
+  *      sentinel lands leaves a torn manifest readers skip, and orphan
+  *      files no manifest references — invisible to readers and reclaimed
+  *      by [[vacuum]].
+  * Because a file's stats ride its own manifest lines, data and stats
+  * become visible together and can never drift apart — the per-file
+  * stats log of Delta Lake (VLDB 2020).
   *
   * A `reset` commit (compaction or a [[checkpoint]] squash) replaces the
   * whole referenced set: the effective file set is the union of commits
@@ -33,11 +34,16 @@ import java.nio.charset.StandardCharsets
   * object stores — so multi-writer safety does not rest on an external
   * scheduler at the object-store design point.
   *
-  * Format: line-oriented (one `kind<TAB>root-relative-path` per line),
-  * closed by a bare `end` line — partition path segments are URL-encoded
-  * by Spark, so paths are tab/newline-free by construction. The sentinel
-  * makes a manifest self-validating: it is written DIRECTLY at its final
-  * path with `create(overwrite = false)`, so a concurrent writer racing
+  * Format: line-oriented, closed by a bare `end` line. A `data<TAB>path`
+  * line adds a table-relative file; a `filestats<TAB>path<TAB>fields`
+  * line carries stats for one file (several lines may name one file, and
+  * the fields are the writer's, see [[FileStats]]). Partition path
+  * segments are URL-encoded by Spark, so paths are tab/newline-free by
+  * construction. Manifests written before per-file stats also hold
+  * `stats` lines naming files of a separate stats-log tree; those lines
+  * are ignored, and their data files read as files without stats. The
+  * sentinel makes a manifest self-validating: it is written DIRECTLY at
+  * its final path with `create(overwrite = false)`, so a concurrent writer racing
   * the same id FAILS (and retries with the next id) instead of silently
   * replacing a committed manifest — the POSIX/object-store `rename`
   * overwrite hazard. A reader (or a crash) that catches a manifest
@@ -55,13 +61,18 @@ object TableLog {
     * [[TokenPrefix]]), `len` and `mtime` the manifest file's own, as the
     * commit listing saw them. */
   final case class Commit(id: Long, reset: Boolean,
-      dataFiles: Seq[String], statsFiles: Seq[String],
+      dataFiles: Seq[String], fileStats: Seq[FileStatsLine],
       table: String, len: Long, mtime: Long) {
     def stamp: Commit.Stamp = Commit.Stamp(table, id, len, mtime)
   }
   object Commit {
     final case class Stamp(table: String, id: Long, len: Long, mtime: Long)
   }
+
+  /** One `filestats` line: stats `fields` for data file `file` (table
+    * relative). The log stores the fields as given; they may hold tabs
+    * but no newline. */
+  final case class FileStatsLine(file: String, fields: String)
 
   private def commitsDir(tablePath: Path) = new Path(tablePath, "_commits")
 
@@ -101,7 +112,9 @@ object TableLog {
       id = p.getName.stripSuffix(".commit").toLong,
       reset = kv.exists { case (k, v) => k == "reset" && v == "true" },
       dataFiles = kv.collect { case ("data", v) => v },
-      statsFiles = kv.collect { case ("stats", v) => v },
+      fileStats = kv.collect { case ("filestats", v) if v.contains('\t') =>
+        val i = v.indexOf('\t'); FileStatsLine(v.substring(0, i), v.substring(i + 1))
+      },
       table = table, len = st.getLen, mtime = st.getModificationTime))
   }
 
@@ -159,25 +172,27 @@ object TableLog {
     }
   }
 
-  /** Effective committed file sets from an already-read commit list:
-    * union of commits after the last reset (data paths relative to the
-    * table dir, stats paths relative to the stats dir). */
-  def effectiveFrom(all: Seq[Commit]): (Seq[String], Seq[String]) = {
+  /** Effective committed files from an already-read commit list: the
+    * union of commits after the last reset — the data files (relative to
+    * the table dir) and the stats lines published for them. */
+  def effectiveFrom(all: Seq[Commit]): (Seq[String], Seq[FileStatsLine]) = {
     val lastReset = all.lastIndexWhere(_.reset)
     val live = if (lastReset < 0) all else all.drop(lastReset)
-    (live.flatMap(_.dataFiles), live.flatMap(_.statsFiles))
+    (live.flatMap(_.dataFiles), live.flatMap(_.fileStats))
   }
 
-  /** Effective committed file sets (see [[effectiveFrom]]). */
+  /** Effective committed data files (see [[effectiveFrom]]). The second
+    * element is always empty: it stands where the stats-log files were,
+    * for callers that still destructure that pair. */
   def effective(fs: FileSystem, tablePath: Path): (Seq[String], Seq[String]) =
-    effectiveFrom(commits(fs, tablePath))
+    (effectiveFrom(commits(fs, tablePath))._1, Nil)
 
-  /** Effective file sets AS OF `commitId` (inclusive) — the table exactly
+  /** Effective files AS OF `commitId` (inclusive) — the table exactly
     * as a reader saw it after that commit published. History extends back
     * to the last reset at or before `commitId`; a reset (compaction or
     * squash) plus its vacuum reclaims older files, so snapshots older
     * than the latest reset are only readable until that vacuum runs. */
-  def effectiveAt(all: Seq[Commit], commitId: Long): (Seq[String], Seq[String]) =
+  def effectiveAt(all: Seq[Commit], commitId: Long): (Seq[String], Seq[FileStatsLine]) =
     effectiveFrom(all.filter(_.id <= commitId))
 
   /** Same-JVM commit serialization, keyed by qualified table path. The
@@ -203,8 +218,10 @@ object TableLog {
     * Same-process writers (the [[graft.jobs.JobRegistry]] case) are
     * additionally serialized by the JVM lock. */
   def publish(fs: FileSystem, tablePath: Path, dataFiles: Seq[String],
-      statsFiles: Seq[String], reset: Boolean = false,
+      fileStats: Seq[FileStatsLine], reset: Boolean = false,
       store: ManifestStore = ManifestStore.ExclusiveCreate): Long = {
+    require(!fileStats.exists(l => l.file.contains('\t') || (l.file + l.fields).contains('\n')),
+      s"stats lines for $tablePath must hold no newline, nor a tab in the file name")
     val lock = lockFor(fs, tablePath)
     lock.synchronized {
       val dir = commitsDir(tablePath)
@@ -212,7 +229,8 @@ object TableLog {
       val body = new StringBuilder("graft-commit-v1\n")
       if (reset) body.append("reset\ttrue\n")
       dataFiles.foreach(f => body.append("data\t").append(f).append('\n'))
-      statsFiles.foreach(f => body.append("stats\t").append(f).append('\n'))
+      fileStats.foreach(l =>
+        body.append("filestats\t").append(l.file).append('\t').append(l.fields).append('\n'))
       body.append("end\n")
       val bytes = body.toString.getBytes(StandardCharsets.UTF_8)
       var attempt = 0
@@ -238,8 +256,9 @@ object TableLog {
   }
 
   /** Squash the live manifest set into ONE `reset` commit referencing
-    * exactly the same files — no data moves or rewrites. A streaming
-    * sink lands one manifest per micro-batch, so commit listing (paid by
+    * exactly the same files, with their stats lines — no data moves or
+    * rewrites. A streaming sink lands one manifest per micro-batch, so
+    * commit listing (paid by
     * every read) grows O(commits); a checkpoint folds it back to O(1)
     * once [[vacuum]] prunes the superseded manifests. Returns the squash
     * commit id, or -1 when the log has fewer than two live manifests
@@ -291,7 +310,7 @@ object TableLog {
     f.substring(b.length + 1)
   }
 
-  /** Delete files under the table/stats trees that no live commit
+  /** Delete files under the table tree that no live commit
     * references, plus manifests older than the last reset and (when
     * `stageRoot` is given) leftover `stagePrefix*` dirs of crashed
     * batches from writers that staged before writing in place. Safe
@@ -301,20 +320,14 @@ object TableLog {
     * the table's writer lock). Pass the table-scoped `stagePrefix`
     * ([[StockStore]] uses `stage-<dataType>-`) so the sweep never
     * deletes a sibling table's stage dir. */
-  def vacuum(fs: FileSystem, tablePath: Path, statsPath: Path,
+  def vacuum(fs: FileSystem, tablePath: Path,
       stageRoot: Option[Path] = None, stagePrefix: String = "stage-"): Long = {
-    val (data, stats) = effective(fs, tablePath)
-    val live: Set[String] =
-      (data.map(r => new Path(tablePath, r).toUri.getPath) ++
-        stats.map(r => new Path(statsPath, r).toUri.getPath)).toSet
+    val live = effective(fs, tablePath)._1.map(r => new Path(tablePath, r).toUri.getPath).toSet
     var removed = 0L
-    def sweep(root: Path): Unit =
-      listFilesRecursively(fs, root)
-        .filter(p => p.getName.endsWith(".parquet"))
-        .filterNot(p => live.contains(p.toUri.getPath))
-        .foreach { p => if (fs.delete(p, false)) removed += 1 }
-    sweep(tablePath)
-    sweep(statsPath)
+    listFilesRecursively(fs, tablePath)
+      .filter(p => p.getName.endsWith(".parquet"))
+      .filterNot(p => live.contains(p.toUri.getPath))
+      .foreach { p => if (fs.delete(p, false)) removed += 1 }
     // crashed-batch staging dirs (they live beside the table dir)
     stageRoot.foreach { r =>
       if (fs.exists(r)) fs.listStatus(r).map(_.getPath)

@@ -18,8 +18,9 @@ import java.nio.charset.StandardCharsets
   * spot-check recent rows, run a one-off SELECT).
   *
   * Designed to stay driver-cheap at any table size:
-  *   - row counts / min-max come from the O(#batches) incremental stats
-  *     log ([[StockStore.incrementalStats]]), never a table scan;
+  *   - row counts / min-max come from the per-file stats the manifest
+  *     carries ([[StockStore.incrementalStats]]), folded on the driver,
+  *     never a table scan;
   *   - `/table/<name>` samples are partition-pruned (optional `ticker=`)
   *     and LIMIT-capped (≤ [[MaxRows]]), so the driver collects a bounded
   *     result no matter how large the store is;
@@ -37,7 +38,9 @@ import java.nio.charset.StandardCharsets
   *                                 → A8 per-(ticker, interval))
   *   - `/table/<name>/commits`     pinnable commit ids (time travel)
   *   - `/sql?q=SELECT...`          read-only ad-hoc query over views
-  *                                 `<name>` and `<name>__stats`
+  *                                 `<name>` and `<name>__stats` (a temp
+  *                                 view of the incremental stats, not a
+  *                                 directory)
   */
 object InspectServer {
 
@@ -141,7 +144,7 @@ object InspectServer {
 
   private def tablesJson(spark: SparkSession, root: String): String =
     presentTypes(spark, root).map { dt =>
-      // O(#batches) incremental log, aggregated to one driver row — no scan
+      // the manifest's per-file stats, aggregated to one driver row — no scan
       val agg = StockStore.incrementalStats(spark, root, dt)
         .agg(org.apache.spark.sql.functions.sum("row_count"),
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))

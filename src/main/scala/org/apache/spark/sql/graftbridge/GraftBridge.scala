@@ -45,10 +45,12 @@ object GraftBridge {
     * through `committer` instead of the commit protocol the session conf
     * names: the file writer a `df.write.parquet` runs, as one SQL
     * execution, with no catalog refresh. `hadoopOptions` go into this
-    * write's Hadoop conf only, the one its tasks receive. */
+    * write's Hadoop conf only, the one its tasks receive; `statsTrackers`
+    * see the written rows in the write's tasks. */
   def writeParquet(df: org.apache.spark.sql.DataFrame, path: String, partitionCols: Seq[String],
       committer: org.apache.spark.internal.io.FileCommitProtocol,
-      hadoopOptions: Map[String, String]): Unit = {
+      hadoopOptions: Map[String, String],
+      statsTrackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker]): Unit = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.FileFormatWriter
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -63,7 +65,7 @@ object GraftBridge {
       FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
         session.sessionState.newHadoopConfWithOptions(hadoopOptions),
-        parts, None, Nil, Map.empty)
+        parts, None, statsTrackers, Map.empty)
     }
   }
 

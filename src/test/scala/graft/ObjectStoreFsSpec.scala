@@ -322,7 +322,6 @@ class ObjectStoreFsSpec extends AnyFunSuite {
   test("full log lifecycle on the object store: publish, promote, checkpoint, vacuum") {
     withStore { (fs, root) =>
       val tp = new Path(s"$root/t")
-      val sp = new Path(s"$root/t__stats")
       // a file written in place, then found by listing as a writer's
       // first commit folds it in (no rename: the store's writes have none)
       write(fs, new Path(tp, "p=1/f0.parquet"), "d0")
@@ -336,7 +335,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
       assert(TableLog.effective(fs, tp)._1.toSet == Set("p=1/f0.parquet", "p=1/f1.parquet"))
       // squash to one reset commit, then vacuum superseded manifests + orphan
       assert(TableLog.checkpoint(fs, tp) >= 0)
-      val removed = TableLog.vacuum(fs, tp, sp)
+      val removed = TableLog.vacuum(fs, tp)
       assert(removed >= 1, s"expected at least the orphan reclaimed, removed=$removed")
       assert(!fs.exists(new Path(tp, "p=1/orphan.parquet")))
       // superseded manifests are deleted (uncounted) — only the squash remains

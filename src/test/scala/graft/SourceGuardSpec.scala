@@ -49,10 +49,14 @@ class SourceGuardSpec extends AnyFunSuite {
   test("the stores read parquet only through ManifestTable, bar the legacy-directory fallbacks") {
     // every other `.parquet(` there is an InPlaceWrite
     val reads = hits("""(?<!InPlaceWrite)\.parquet\(\w*""", "graft/store", "graft/corpus")
-    assert(reads == Seq(
-      "graft/store/StockStore.scala" -> ".parquet(statsLogPath",
-      "graft/store/StockStore.scala" -> ".parquet(tablePath"), s"$reads")
+    assert(reads == Seq("graft/store/StockStore.scala" -> ".parquet(tablePath"), s"$reads")
     assert(hits("""new\s+InMemoryFileIndex\(""", "graft").map(_._1) ==
       Seq("graft/store/ManifestTable.scala"))
+  }
+
+  test("no store writes or reads a separate stats tree") {
+    // per-file stats ride the manifest (FileStats); the inspector's
+    // `<table>__stats` is a temp view over them, not a directory
+    assert(hits("""__stats""", "graft").map(_._1).distinct == Seq("graft/tools/InspectServer.scala"))
   }
 }

@@ -38,7 +38,6 @@ class TableLogSoakSpec extends AnyFunSuite {
     val root = SparkTestSession.tempDir(s"tlog-soak-$seed")
     val fs = hfs(root)
     val tp = new Path(s"$root/t")
-    val sp = new Path(s"$root/t__stats")
     fs.mkdirs(tp)
 
     var expected = Set.empty[String]              // current effective data set
@@ -87,7 +86,7 @@ class TableLogSoakSpec extends AnyFunSuite {
     }
 
     def doVacuum(): Unit = {
-      TableLog.vacuum(fs, tp, sp)
+      TableLog.vacuum(fs, tp)
       orphans.foreach { rel =>
         assert(!fs.exists(new Path(tp, rel)), s"vacuum must reclaim orphan $rel")
       }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A12 atomic-commit protocol ([[TableLog]]): visibility is granted only
-  * by the manifest rename, so half-written batches (crash simulations)
+  * by the manifest create, so half-written batches (crash simulations)
   * are invisible, stats can never drift from data, compaction swaps
   * atomically, and legacy plain-append tables fold into the log. */
 class TableLogSpec extends AnyFunSuite {
@@ -42,30 +42,60 @@ class TableLogSpec extends AnyFunSuite {
 
     assert(StockStore.table(spark, root, Streaming).collect().toSet == before,
       "readers must not see files no manifest references")
-    val removed = TableLog.vacuum(f, tp, new Path(s"$root/streaming__stats"))
+    val removed = TableLog.vacuum(f, tp)
     assert(removed == 1 && !f.exists(orphan), "vacuum reclaims the orphan")
     assert(StockStore.table(spark, root, Streaming).collect().toSet == before)
   }
 
-  test("stats and data commit together; orphan stats files are invisible") {
+  test("an orphan data file does not skew incremental stats") {
     val root = SparkTestSession.tempDir("tlog-stats")
     StockStore.upsert(spark, root, Streaming, tickDf(100.0))
     StockStore.upsert(spark, root, Streaming, tickDf(200.0))
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getAs[String]("ticker") -> r.getAs[Long]("row_count")).toMap
     val scan = asMap(StockStore.tableStats(spark, root, Streaming))
-    assert(asMap(StockStore.incrementalStats(spark, root, Streaming)) == scan)
+    assert(scan == Map("SPY" -> 6L) && asMap(StockStore.incrementalStats(spark, root, Streaming)) == scan)
 
-    // crash simulation: a stats row written but never committed
-    val f = fs(root)
-    val sp = new Path(s"$root/streaming__stats")
-    val statsFile = TableLog.listFilesRecursively(f, sp)
-      .filter(_.getName.endsWith(".parquet")).head
-    val orphan = new Path(sp, s"part-orphan-${java.util.UUID.randomUUID()}.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(f, statsFile, f, orphan, false,
-      spark.sparkContext.hadoopConfiguration)
+    // crash simulation: a data write whose publish never happened
+    val tp = new Path(s"$root/streaming")
+    val orphan = InPlaceWrite.parquet(StockStore.table(spark, root, Streaming)
+      .withColumn("price", col("price") + 1000.0), tp, Seq("ticker", "y", "m", "d"))
+    assert(orphan.nonEmpty && orphan.forall(r => fs(root).exists(new Path(tp, r))))
     assert(asMap(StockStore.incrementalStats(spark, root, Streaming)) == scan,
-      "an uncommitted stats file must not skew incremental stats")
+      "an uncommitted data file must not skew incremental stats")
+  }
+
+  test("a log with nothing committed reads as empty: an unpublished write stays invisible and compact commits nothing") {
+    val root = SparkTestSession.tempDir("tlog-empty-live")
+    val f = fs(root)
+    val tp = new Path(s"$root/streaming")
+    // the genesis commit a first upsert publishes before it writes, then
+    // a write that died before its own publish
+    TableLog.publish(f, tp, Nil, Nil)
+    val orphan = InPlaceWrite.parquet(tickDf(100.0).withColumn("version", lit(1))
+      .withColumn("y", lit(2025)).withColumn("m", lit(9)).withColumn("d", lit(11)),
+      tp, Seq("ticker", "y", "m", "d"))
+    assert(orphan.nonEmpty && orphan.forall(r => f.exists(new Path(tp, r))))
+
+    val t = StockStore.table(spark, root, Streaming)
+    assert(t.count() == 0, "table() must not read files no commit references")
+    assert(t.columns.toSeq == Seq("timestamp", "price", "volume", "ask_price", "bid_price",
+      "ask_size", "bid_size", "version", "ticker", "y", "m", "d"))
+    val req = ReadApi.ReadRequest(Streaming, "SPY", None, "2025-09-11 00:00", "2025-09-11 23:59")
+    // the read API's empty-result guard (R8), not the orphan's rows
+    assert(intercept[IllegalStateException](ReadApi.read(spark, root, req)).getMessage
+      .startsWith("no rows for streaming/SPY"))
+    assert(StockStore.tableStats(spark, root, Streaming).count() == 0)
+    assert(StockStore.incrementalStats(spark, root, Streaming).count() == 0)
+    val genesis = TableLog.commits(f, tp)
+    assert(StockStore.compact(spark, root, Streaming) == 0)
+    assert(TableLog.commits(f, tp) == genesis, "compact must commit nothing")
+    assert(StockStore.tableAt(spark, root, Streaming, genesis.head.id).count() == 0)
+
+    // the next upsert writes its own rows and still never the orphan's
+    assert(StockStore.upsert(spark, root, Streaming, tickDf(200.0)).written == 3)
+    assert(StockStore.table(spark, root, Streaming).select("price").collect()
+      .map(_.getDouble(0)).toSet == Set(200.0, 201.0, 202.0))
   }
 
   test("compact swaps via a reset commit and prunes superseded manifests") {
@@ -253,7 +283,7 @@ class TableLogSpec extends AnyFunSuite {
     // crash simulation: a put that died between stage write and rename
     val orphan = new Path(new Path(tp, "_commits"), ".tmp-put-dead-writer")
     val out = f.create(orphan, false); out.write("torn".getBytes("UTF-8")); out.close()
-    TableLog.vacuum(f, tp, new Path(s"$root/t__stats"))
+    TableLog.vacuum(f, tp)
     assert(!f.exists(orphan), "crashed stage file must be reclaimed")
     assert(TableLog.effective(f, tp)._1 == Seq("a.parquet"), "commit untouched")
   }
@@ -273,7 +303,7 @@ class TableLogSpec extends AnyFunSuite {
     // the torn file's NAME still occupies its id — the next publish goes past it
     val id2 = TableLog.publish(f, tp, Seq("c.parquet"), Nil)
     assert(id2 == id0 + 2, "a torn id must never be reused")
-    TableLog.vacuum(f, tp, new Path(s"$root/t__stats"))
+    TableLog.vacuum(f, tp)
     assert(!f.exists(torn), "vacuum reclaims torn manifests")
     assert(TableLog.commits(f, tp).map(_.id) == Seq(id0, id2))
   }
@@ -306,7 +336,6 @@ class TableLogSpec extends AnyFunSuite {
     (0 until 4).foreach(i => StockStore.upsert(spark, root, Streaming, tickDf(100.0 + 10 * i)))
     val f = fs(root)
     val tp = new Path(s"$root/streaming")
-    val sp = new Path(s"$root/streaming__stats")
     val before = StockStore.table(spark, root, Streaming).collect().toSet
     val filesBefore = TableLog.effective(f, tp)._1.toSet
     assert(TableLog.commits(f, tp).size == 5) // genesis + 4 batches
@@ -316,10 +345,10 @@ class TableLogSpec extends AnyFunSuite {
     assert(squashed.last.reset, "squash must be a reset commit")
     assert(TableLog.effectiveFrom(squashed)._1.toSet == filesBefore,
       "a squash references exactly the same data files — nothing moves")
-    TableLog.vacuum(f, tp, sp)
+    TableLog.vacuum(f, tp)
     assert(TableLog.commits(f, tp).size == 1, "vacuum prunes superseded manifests")
     assert(StockStore.table(spark, root, Streaming).collect().toSet == before)
-    // stats log survives the squash
+    // the stats lines survive the squash
     val inc = StockStore.incrementalStats(spark, root, Streaming).collect()
     assert(inc.head.getAs[Long]("row_count") == before.size)
     // idempotent: nothing further to squash
@@ -336,7 +365,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.maybeCheckpoint(f, tp, every = 4) >= 0)
     assert(TableLog.effective(f, tp)._1.toSet ==
       (0 until 4).map(i => s"f$i.parquet").toSet)
-    TableLog.vacuum(f, tp, new Path(s"$root/t__stats"))
+    TableLog.vacuum(f, tp)
     assert(TableLog.commits(f, tp).size == 1)
   }
 
@@ -385,7 +414,6 @@ class TableLogSpec extends AnyFunSuite {
     StockStore.upsert(spark, root, Streaming, tickDf(200.0))
     val f = fs(root)
     val tp = new Path(s"$root/streaming")
-    val sp = new Path(s"$root/streaming__stats")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("ticker", "timestamp", "price", "volume", "version").collect().map(_.toString).toSet
     val req = ReadApi.ReadRequest(Streaming, "SPY", None, "2025-09-11 00:00", "2025-09-11 23:59")
@@ -396,12 +424,10 @@ class TableLogSpec extends AnyFunSuite {
     assert(before.size == 6 && viaApi == before)
 
     // a write that died before its publish: data files in the table's
-    // own partition directories and a stats-log file, on no manifest line
+    // own partition directories, on no manifest line
     val orphanData = InPlaceWrite.parquet(StockStore.table(spark, root, Streaming)
       .withColumn("price", col("price") + 1000.0), tp, Seq("ticker", "y", "m", "d"))
-    val orphanStats = InPlaceWrite.parquet(
-      StockStore.incrementalStats(spark, root, Streaming).coalesce(1), sp, Nil)
-    val orphans = orphanData.map(new Path(tp, _)) ++ orphanStats.map(new Path(sp, _))
+    val orphans = orphanData.map(new Path(tp, _))
     assert(orphanData.nonEmpty && orphanData.forall(_.startsWith("ticker=SPY/y=2025/m=9/d=11/")))
     assert(orphans.forall(f.exists), s"$orphans")
 
@@ -410,7 +436,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(rows(ReadApi.read(spark, root, req)) == viaApi)
     assert(StockStore.incrementalStats(spark, root, Streaming).collect().toSet == stats)
 
-    assert(TableLog.vacuum(f, tp, sp) == orphans.size)
+    assert(TableLog.vacuum(f, tp) == orphans.size)
     assert(!orphans.exists(f.exists), "vacuum deletes every orphan")
     assert(rows(StockStore.table(spark, root, Streaming)) == before)
   }

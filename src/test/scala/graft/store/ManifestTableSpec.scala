@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * must equal what `spark.read.option("mergeSchema", "true")
   * .option("basePath", …).parquet(files)` gives over the same files —
   * schema (names, types, nullability, order), rows, and the scan a
-  * range read executes — for the latest commit, an as-of commit, the
-  * corpus and the stats log. */
+  * range read executes — for the latest commit, an as-of commit and the
+  * corpus. */
 class ManifestTableSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -83,7 +83,6 @@ class ManifestTableSpec extends AnyFunSuite {
   test("the latest and an as-of commit read as spark.read reads their files; the as-of read keeps the memo") {
     val root = SparkTestSession.tempDir("manifest-table-stock")
     val tp = new Path(s"$root/streaming")
-    val sp = new Path(s"$root/streaming__stats")
     StockStore.upsert(spark, root, Streaming, ticks(Seq("AAA", "BBB"), t0, 2, 3, 10.0))
     val before = StockStore.commitIds(spark, root, Streaming).last
     // A10: a later commit brings a `venue` column the first one lacks
@@ -109,15 +108,26 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(jobs == 0, s"table() after an as-of read started $jobs Spark job(s)")
     assert(again.schema == latest.schema)
 
-    // the stats log, through the same relation
+    // a read of some of the latest commit's files (what incremental
+    // stats scans for files without stats) reads their rows and keeps
+    // the whole commit's memo
     val snap = ManifestTable.latest(fs, tp).get
-    assertSame(ManifestTable.relation(spark, fs, sp, snap.stats, snap),
-      sparkRead(sp, snap.stats), "stats log")
+    val first = TableLog.effectiveAt(all, before)._1
+    val part = ManifestTable.relation(spark, fs, tp, first, snap.copy(latest = false))
+    assert(rows(part.select("ticker", "timestamp", "price", "volume", "version")) ==
+      rows(sparkRead(tp, first).select("ticker", "timestamp", "price", "volume", "version")))
+    val (again2, jobs2) = SparkTestSession.jobsDuring(StockStore.table(spark, root, Streaming))
+    assert(jobs2 == 0 && again2.schema == latest.schema,
+      s"table() after a partial read started $jobs2 Spark job(s)")
+
+    // the manifest's per-file stats, folded, equal the same aggregate
+    // over spark.read of the committed files
     val stats = StockStore.incrementalStats(spark, root, Streaming)
-    val plainStats = sparkRead(sp, snap.stats).groupBy(col("ticker"))
-      .agg(sum(col("row_count")).as("row_count"),
-        min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"))
-    assertSame(stats, plainStats, "incremental stats")
+    val plainStats = sparkRead(tp, TableLog.effectiveFrom(all)._1).groupBy(col("ticker"))
+      .agg(count(lit(1)).as("row_count"),
+        min(col("timestamp")).as("min_ts"), max(col("timestamp")).as("max_ts"))
+    assert(stats.schema.map(f => f.name -> f.dataType) == plainStats.schema.map(f => f.name -> f.dataType))
+    assert(rows(stats) == rows(plainStats), "incremental stats")
   }
 
   test("the corpus reads as spark.read reads its files, with or without mergeSchema") {

@@ -14,7 +14,9 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
   * oracle. Random batch sequences carry null payload fields, ±0.0, NaN,
   * replays, in-batch key conflicts and an A10 dynamic column; rows,
   * versions and [[StockStore.UpsertStats]] must be equal after every
-  * batch. */
+  * batch, and the manifest's folded per-file stats
+  * ([[StockStore.incrementalStats]]) must equal the full-scan view
+  * ([[StockStore.tableStats]]). */
 object MergeProperties extends Properties("merge") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -110,16 +112,21 @@ object MergeProperties extends Properties("merge") {
       oracle = oracle ++ fresh
       val got = StockStore.upsert(spark, root, Streaming, batch)
       // a store whose batches so far kept no row has no table yet
-      val rows = if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, Streaming.name))) Nil
+      val hasTable = java.nio.file.Files.exists(java.nio.file.Paths.get(root, Streaming.name))
+      val rows = if (!hasTable) Nil
         else {
           val table = StockStore.table(spark, root, Streaming)
           val venue = if (table.columns.contains("venue")) col("venue") else lit(null).cast("string")
           table.select(col("ticker"), col("timestamp"), col("price"), col("volume"),
             venue.as("venue"), col("version")).collect().toSeq
         }
-      val same = got == expected && sorted(rows) == sorted(oracle)
+      val (incremental, scanned) = if (!hasTable) (Nil, Nil)
+        else (sorted(StockStore.incrementalStats(spark, root, Streaming).collect().toSeq),
+          sorted(StockStore.tableStats(spark, root, Streaming).collect().toSeq))
+      val same = got == expected && sorted(rows) == sorted(oracle) && incremental == scanned
       if (!same) println(s"merge mismatch on $b: stats $got vs $expected\n" +
-        s"  store  ${sorted(rows)}\n  oracle ${sorted(oracle)}")
+        s"  store  ${sorted(rows)}\n  oracle ${sorted(oracle)}\n" +
+        s"  incremental stats $incremental\n  scanned stats $scanned")
       same
     }
   }

@@ -169,8 +169,47 @@ class UpsertPathSpec extends AnyFunSuite {
     val (replay, replayJobs) = SparkTestSession.jobsDuring(
       Commands.runHistorical(spark, root, cmd)(_ => page))
     assert(first == UpsertStats(2, 2, 0, 0, 0) && replay == UpsertStats(2, 0, 2, 0, 0))
-    // the retired full-count mode started 19 and 21 jobs here, and the
-    // join merge with its staged write 10 and 12
-    assert((firstJobs, replayJobs) == ((7, 6)), s"jobs: first $firstJobs, replay $replayJobs")
+    // the retired full-count mode started 19 and 21 jobs here, the join
+    // merge with its staged write 10 and 12, and the stats-log write 7
+    // and 6
+    assert((firstJobs, replayJobs) == ((6, 6)), s"jobs: first $firstJobs, replay $replayJobs")
+  }
+
+  test("an upsert's stats ride its data write: no stats job, no thread, no stats tree") {
+    val sc = spark.sparkContext
+    // codegen and first-use work stays out of the counted runs
+    val warm = SparkTestSession.tempDir("upsert-stats-warm")
+    StockStore.upsert(spark, warm, Streaming, ticks(Seq("SPY", "QQQ"), 3, 100.0))
+    StockStore.upsert(spark, warm, Streaming, ticks(Seq("SPY", "QQQ"), 3, 200.0))
+    val root = SparkTestSession.tempDir("upsert-stats")
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Thread.getAllStackTraces.keySet.forEach(t => threads.add(t.getName))
+    }
+    sc.addSparkListener(listener)
+    val (fresh, freshJobs) = try SparkTestSession.jobsDuring(
+      StockStore.upsert(spark, root, Streaming, ticks(Seq("SPY", "QQQ"), 3, 100.0)))
+      finally GraftBridge.drainListenerBus(sc)
+    val (existing, existingJobs) = try SparkTestSession.jobsDuring(
+      StockStore.upsert(spark, root, Streaming, ticks(Seq("SPY", "QQQ"), 3, 200.0)))
+      finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(listener) }
+    assert(fresh.written == 6 && existing.written == 6, s"$fresh / $existing")
+    // the labelled steps' jobs, plus the footer-schema job of the
+    // existing table's first read; the stats-log write ran one more each
+    assert((freshJobs, existingJobs) == ((6, 7)), s"jobs: fresh $freshJobs, existing $existingJobs")
+    assert(!threads.toArray.exists(_.toString.startsWith("upsert-")),
+      s"an upsert job ran beside a thread of the upsert's own")
+    assert(!new java.io.File(root).list().exists(_.contains("__stats")),
+      new java.io.File(root).list().toSeq)
+
+    // every committed file carries its stats, so folding them reads none
+    val tp = new org.apache.hadoop.fs.Path(s"$root/streaming")
+    val (data, lines) = TableLog.effectiveFrom(TableLog.commits(ManifestTable.fs(spark, tp), tp))
+    assert(data.size == 4 && lines.map(_.file).toSet == data.toSet, s"$data / $lines")
+    val (stats, statsJobs) = SparkTestSession.jobsDuring(
+      StockStore.incrementalStats(spark, root, Streaming).collect())
+    assert(statsJobs == 0, s"incremental stats started $statsJobs job(s)")
+    assert(stats.map(r => r.getString(0) -> r.getLong(1)).toSet == Set("SPY" -> 6L, "QQQ" -> 6L))
   }
 }
